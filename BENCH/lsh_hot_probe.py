@@ -22,16 +22,18 @@ is (id_a, id_b) strings, so count() IS the honest drain here):
     projected shuffle bytes from the measured count instead)
 
 Second regime — TEMPLATE pages (the worst case): the same 5 % slice
-REPLACED by a fixed ~60-token banner plus one doc-unique token
-(near-identical docs, pairwise shingle Jaccard ≈ 0.9 — exact dedup
-would NOT remove them). ~95 % of each planted doc's shingles are
-shared, so most of its 6 band keys collapse onto one global value per
-band: hot buckets of ~0.9 × 100k members. The uncapped candidate
-join in this regime is ~6 × C(90k, 2) ≈ 2.4e10 pre-distinct pairs —
-several hundred GB through the distinct's shuffle, more than this
-box's disk and tmpfs combined — so it is never executed; the probe
-records the EXACT analytic volume instead (sum over buckets of
-C(B,2), one aggregation over the bands table, no join) next to the
+REPLACED by a fixed 68-token banner plus one doc-unique token
+(near-identical docs: ~66 shared shingles and 1 unique one, pairwise
+shingle Jaccard ≈ 0.97 — exact dedup would NOT remove them). Nearly
+all of each planted doc's shingles are shared, so most of its 6 band
+keys collapse onto one global value per band: hot buckets of
+~0.97 × 100k members. The uncapped candidate join in this regime is
+~6 × C(97k, 2) ≈ 2.8e10 pre-distinct pairs — several hundred GB
+through the distinct's shuffle, more than this box's disk and tmpfs
+combined — so it is never executed; the probe records the EXACT
+analytic volume instead (sum over buckets of C(B,2), one aggregation
+over the bands table, no join) as `template_analytic_2m.all_pairs`,
+which is the figure to cite over the estimate above, next to the
 capped full operator completing at clean-corpus speed. That a single
 planted template makes the uncapped job un-runnable on a whole box is
 precisely the failure mode max_bucket exists to prevent.
@@ -83,7 +85,7 @@ def hot_corpus(spark, pages_path: str, n: int | None = None):
 
 def template_corpus(spark, pages_path: str):
     """5 % of docs REPLACED by the template banner + one unique token
-    (near-identical, Jaccard ≈ 0.9 pairwise — survives exact dedup)."""
+    (near-identical, Jaccard ≈ 0.97 pairwise — survives exact dedup)."""
     from pyspark.sql import functions as F
 
     pages = spark.read.parquet(pages_path)
@@ -228,7 +230,7 @@ def main() -> None:
         ).count(),
     )
     # TEMPLATE regime at full 2M: exact analytic volume (uncapped
-    # join would be ~2.4e10 pre-distinct pairs — never executed; see
+    # join would be ~2.8e10 pre-distinct pairs — never executed; see
     # module docstring) next to the capped operator completing
     tmpl = template_corpus(spark, pages_path)
     t0 = time.perf_counter()

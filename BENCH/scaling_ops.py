@@ -356,6 +356,7 @@ def main() -> None:
     state["substrates"].append(substrate_control(repeats=3))
     _save_state(state_path, state)
     substrate = max(state["substrates"], key=lambda s: s["ceiling"])
+    n_w, n4_w = substrate["widths"]
 
     # one BLAS thread per python worker: the IVF build's numpy GEMM
     # would otherwise spawn a thread pool per worker and oversubscribe
@@ -540,14 +541,15 @@ def main() -> None:
         f"Substrate control (measured by this run, pure CPU, no "
         f"Spark; median of 3 repeats {substrate['repeats']} — a "
         f"single-run divisor would violate the repo's own "
-        f"no-single-run-timings rule): 8 vs 32 single-core pinned "
-        f"python processes running an identical arithmetic loop take "
-        f"{substrate['sec_per_proc_8']}s vs "
-        f"{substrate['sec_per_proc_32']}s per process — this box's "
+        f"no-single-run-timings rule): {n_w} vs {n4_w} single-core "
+        f"pinned python processes running an identical arithmetic "
+        f"loop take {substrate['sec_per_proc_n']}s vs "
+        f"{substrate['sec_per_proc_4n']}s per process — this box's "
         f"hardware itself delivers only "
-        f"{substrate['ceiling']:.3f} per-core throughput at width 32 "
-        f"vs width 8 (SMT siblings / host-oversubscribed vCPUs share "
-        f"execution units). That ceiling applies to EVERY 8-vs-32 "
+        f"{substrate['ceiling']:.3f} per-core throughput at width "
+        f"{n4_w} vs width {n_w} (SMT siblings / host-oversubscribed "
+        f"vCPUs share execution units). That ceiling applies to EVERY "
+        f"N-vs-4N "
         f"comparison on this box regardless of the job; a real "
         f"cluster's 4N executors add whole sockets, memory buses, and "
         f"disks instead. The substrate-normalized column divides the "

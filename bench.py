@@ -197,8 +197,9 @@ def main() -> None:
     # snapshot's slow-host correction factor. The microVM's effective
     # CPU swings ~3× with host neighbors; the round-4 driver snapshot
     # read every query 1.03-1.72× an idle-box re-run of identical code.
-    # A reader normalizes any timing by (sec_per_proc_8 of a reference
-    # run / sec_per_proc_8 here); ceiling is the 8→32 per-core ratio.
+    # A reader normalizes any timing by (sec_per_proc_n of a reference
+    # run / sec_per_proc_n here); ceiling is the N→4N per-core ratio at
+    # the widths the control reports.
     from kgp.substrate import substrate_control
 
     print(

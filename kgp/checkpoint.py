@@ -7,15 +7,23 @@ Protocol per stage:
    row and return a reader of the committed parquet;
 2. else compute the stage DataFrame, write parquet (overwrite — a
    half-written attempt from a crash is clobbered, never merged),
-3. read back per-partition row counters from the committed files and
-   append 'committed' lineage rows.
+3. read back per-partition row counters from the committed files'
+   footers and append 'committed' lineage rows.
 
 Crash-safety argument: parquet's `_SUCCESS` is written only after all
-task commits, and the 'committed' lineage rows are appended strictly
-after that; a kill at ANY point either leaves the stage uncommitted
-(no _SUCCESS or no lineage row ⇒ rerun overwrites) or fully committed
-(⇒ skip). The same two-phase marker maps to an Iceberg snapshot-commit
-in a catalog deployment — this module is the writer seam (SURVEY §1.3).
+task commits. The 'committed' lineage rows are appended strictly after
+that, as ONE ledger part file that is written under a hidden
+`.part-<uuid>.tmp` name and becomes visible only when it is renamed to
+`part-<uuid>.parquet` (kgp.lineage). Ledger readers skip hidden names,
+so a kill at ANY point leaves the stage either uncommitted (no
+`_SUCCESS`, or no visible committed row — at worst an inert hidden
+temp file ⇒ rerun overwrites) or fully committed (⇒ skip). Steps 1
+and 3's ledger work is driver-only metadata I/O through the Hadoop
+FileSystem — a few small-file reads, one small write and one rename
+per stage, never a Spark job — so resume bookkeeping costs tens of
+milliseconds per stage, not a job per call. The same two-phase marker maps to
+an Iceberg snapshot-commit in a catalog deployment — this module is
+the writer seam (SURVEY §1.3).
 
 The full KG pipeline wired through the runner is build_kg_pipeline();
 tests kill it between stages and assert the resumed run skips committed

@@ -1,11 +1,11 @@
 """Tiny driver-side filesystem helpers over the Hadoop FileSystem API.
 
-CLI markers (resume-safety contracts) and existence probes must work
-wherever the job's --output lives — local disk, hdfs://, s3a:// — so
-they go through Hadoop's FileSystem, not os.path (the streaming
-compaction swap in kgp/streaming.py shares `_fs` for the same
-reason). All
-helpers are driver-only metadata operations: one RPC each, never data.
+CLI markers (resume-safety contracts), existence probes and the
+lineage ledger's part files must work wherever the job's --output
+lives — local disk, hdfs://, s3a:// — so they go through Hadoop's
+FileSystem, not os.path (the streaming compaction swap in
+kgp/streaming.py shares `_fs` for the same reason). All helpers are
+driver-only metadata-sized I/O: a few RPCs each, never a Spark job.
 """
 
 from __future__ import annotations
@@ -24,29 +24,59 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def read_text(spark: SparkSession, path: str) -> str:
-    """Small text file (marker-sized) → str."""
+def read_bytes(spark: SparkSession, path: str) -> bytes:
+    """Small file (marker- or ledger-part-sized) → bytes."""
     fs, p = _fs(spark, path)
     stream = fs.open(p)
     try:
         # commons-io ships with Hadoop; FSDataInputStream's
         # read(ByteBuffer) is unsupported on some filesystems
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
+        return bytes(
+            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
         )
     finally:
         stream.close()
 
 
-def write_text(spark: SparkSession, path: str, content: str) -> None:
-    """Atomic-enough marker write: create-overwrite of a tiny file
-    (single block; object stores publish it atomically on close)."""
+def read_text(spark: SparkSession, path: str) -> str:
+    """Small text file (marker-sized) → str."""
+    return read_bytes(spark, path).decode("utf-8")
+
+
+def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create-overwrite of a small file (single block; object stores
+    publish it atomically on close). Hadoop create() makes parent
+    dirs."""
     fs, p = _fs(spark, path)
     stream = fs.create(p, True)
     try:
-        stream.write(bytearray(content.encode("utf-8")))
+        stream.write(bytearray(data))
     finally:
         stream.close()
+
+
+def write_text(spark: SparkSession, path: str, content: str) -> None:
+    """Atomic-enough marker write (see write_bytes)."""
+    write_bytes(spark, path, content.encode("utf-8"))
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Publish ``src`` under ``dst`` (same directory). Atomic on local
+    disk and HDFS; a copy on S3A, where ``dst`` still appears only
+    once complete. Raises if the FileSystem reports failure."""
+    fs, p = _fs(spark, src)
+    if not fs.rename(p, spark._jvm.org.apache.hadoop.fs.Path(dst)):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def list_names(spark: SparkSession, dir_path: str) -> list[str]:
+    """File names directly under ``dir_path``; [] when it does not
+    exist (probed first, so a missing dir raises nothing in the
+    JVM)."""
+    fs, p = _fs(spark, dir_path)
+    if not fs.exists(p):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(p)]
 
 
 def resume_marker_guard(

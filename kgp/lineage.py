@@ -7,27 +7,74 @@ Reference ancestor: the per-task status ledger TaskInfo at
 running/completed/failed/cancelled + timestamps), lifted from
 per-HTTP-task to per-stage-per-partition (SURVEY §1.3 `lineage` table).
 
-The ledger is an append-only parquet directory next to the pipeline
-output. Counters come from the committed output files themselves
-(one row per output file = one write partition) — honest numbers read
-back from the sink, not an in-flight estimate, and free of a second
-pass over the input. In an Iceberg deployment this maps to the
-snapshot summary + a lineage table; the writer seam is this module.
+The ledger is an append-only directory of parquet part files next to
+the pipeline output (`<out_dir>/_lineage`). Counters come from the
+committed output files themselves (one row per output file = one
+write partition) — honest numbers read back from the sink, not an
+in-flight estimate, and free of a second pass over the input. In an
+Iceberg deployment this maps to the snapshot summary + a lineage
+table; the writer seam is this module.
+
+Driver-only metadata I/O. The ledger holds a few rows per stage, so
+the three calls every stage makes — `stage_committed`,
+`per_partition_counts`, `append_lineage` — launch no Spark job: a
+Spark write or read of a handful of rows is pure fixed job overhead
+(scheduling, a parquet commit of one file per task, schema inference)
+that used to cost more per pipeline run than any one stage's work.
+The ledger rows are built as one pyarrow table on the driver and all
+file access goes through the Hadoop FileSystem (`kgp.fsutil`), so
+hdfs:// and s3a:// outputs work exactly like local disk.
+
+Publish step (the crash-safety half owned here; the ordering against
+the stage output's `_SUCCESS` is in kgp.checkpoint):
+1. each append is ONE parquet file, written under a hidden name
+   `.part-<uuid>.tmp`;
+2. it becomes visible only by a rename to `part-<uuid>.parquet`.
+Every reader — `stage_committed` here and Spark's `read_lineage` —
+skips names that start with `.` or `_`, so a kill mid-append leaves at
+most an inert hidden temp file and a row is seen all-or-nothing.
+
+Timestamps are written as UTC-adjusted INT64 micros, which Spark reads
+back as `timestamp` (not `timestamp_ntz`), so `read_lineage` returns
+exactly LINEAGE_SCHEMA. Ledgers written by Spark's own parquet writer
+(INT96 timestamps, `.crc` sidecars, `_SUCCESS`) read the same way, so
+an out_dir left by an older writer resumes, and mixed ledgers
+aggregate. The aggregating reads (`read_lineage`, `run_stats`,
+`run_success_rates`) stay Spark.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import time
+import uuid
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kgp import fsutil
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, partition_id int, rows_out bigint, "
     "status string, started_at timestamp, finished_at timestamp, "
     "error string"
 )
+
+# LINEAGE_SCHEMA as written by append_lineage
+_ARROW_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("stage", pa.string()),
+    ("partition_id", pa.int32()),
+    ("rows_out", pa.int64()),
+    ("status", pa.string()),
+    ("started_at", pa.timestamp("us", tz="UTC")),
+    ("finished_at", pa.timestamp("us", tz="UTC")),
+    ("error", pa.string()),
+])
 
 STATUS_COMMITTED = "committed"
 STATUS_SKIPPED = "skipped"
@@ -38,7 +85,9 @@ def lineage_dir(out_dir: str) -> str:
     return f"{out_dir}/_lineage"
 
 
-def per_partition_counts(spark: SparkSession, stage_path: str) -> DataFrame:
+def per_partition_counts(
+    spark: SparkSession, stage_path: str
+) -> list[tuple[int, int]]:
     """(partition_id, rows_out) from the committed parquet FOOTERS:
     one output file ≡ one write partition.
 
@@ -50,11 +99,6 @@ def per_partition_counts(spark: SparkSession, stage_path: str) -> DataFrame:
     when footers aren't reachable from the driver (remote FS without a
     pyarrow filesystem)."""
     try:
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
         files = sorted(
             glob.glob(os.path.join(stage_path, "*.parquet"))
             + glob.glob(os.path.join(stage_path, "*", "*.parquet"))
@@ -68,10 +112,8 @@ def per_partition_counts(spark: SparkSession, stage_path: str) -> DataFrame:
                 (i, c)
                 for i, c in enumerate(c for c in counts if c > 0)
             ]
-            return spark.createDataFrame(
-                rows or [(0, 0)], "partition_id int, rows_out bigint"
-            )
-    except (ImportError, OSError, ValueError):
+            return rows or [(0, 0)]
+    except (OSError, ValueError):
         # ValueError covers pyarrow.lib.ArrowInvalid (corrupt footer) —
         # fall through to the authoritative data scan
         pass
@@ -82,10 +124,7 @@ def per_partition_counts(spark: SparkSession, stage_path: str) -> DataFrame:
         .orderBy("_f")
         .collect()
     )
-    rows = [(i, r["count"]) for i, r in enumerate(by_file)]
-    return spark.createDataFrame(
-        rows or [(0, 0)], "partition_id int, rows_out bigint"
-    )
+    return [(i, r["count"]) for i, r in enumerate(by_file)] or [(0, 0)]
 
 
 def append_lineage(
@@ -95,25 +134,36 @@ def append_lineage(
     stage: str,
     status: str,
     started_at: float,
-    counts: DataFrame | None = None,
+    counts: list[tuple[int, int]] | None = None,
     error: str | None = None,
 ) -> None:
+    """Append one row per (partition_id, rows_out) in ``counts`` (one
+    all-NULL-counter row without) as one part file: hidden temp name,
+    then rename (see the module docstring)."""
     now = datetime.now(timezone.utc)
     t0 = datetime.fromtimestamp(started_at, tz=timezone.utc)
-    base = counts if counts is not None else spark.createDataFrame(
-        [(None, None)], "partition_id int, rows_out bigint"
+    rows = counts if counts is not None else [(None, None)]
+    n = len(rows)
+    table = pa.table(
+        {
+            "run_id": [run_id] * n,
+            "stage": [stage] * n,
+            "partition_id": [p for p, _ in rows],
+            "rows_out": [c for _, c in rows],
+            "status": [status] * n,
+            "started_at": [t0] * n,
+            "finished_at": [now] * n,
+            "error": [error] * n,
+        },
+        schema=_ARROW_SCHEMA,
     )
-    rows = base.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.col("partition_id"),
-        F.col("rows_out"),
-        F.lit(status).alias("status"),
-        F.lit(t0).alias("started_at"),
-        F.lit(now).alias("finished_at"),
-        F.lit(error).cast("string").alias("error"),
-    )
-    rows.write.mode("append").parquet(lineage_dir(out_dir))
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    ledger = lineage_dir(out_dir)
+    name = f"part-{uuid.uuid4().hex}"
+    tmp = f"{ledger}/.{name}.tmp"
+    fsutil.write_bytes(spark, tmp, buf.getvalue().to_pybytes())
+    fsutil.rename(spark, tmp, f"{ledger}/{name}.parquet")
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -123,23 +173,24 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
 def stage_committed(spark: SparkSession, out_dir: str, stage: str) -> bool:
     """A stage is resumable-from iff a committed lineage row exists AND
     the output's _SUCCESS marker survives (both written post-commit;
-    either alone is insufficient — see kgp.checkpoint)."""
-    try:
-        lin = read_lineage(spark, out_dir)
-    except Exception:
+    either alone is insufficient — see kgp.checkpoint). Reads only the
+    `stage` and `status` columns of the visible part files; a missing
+    ledger is simply "not committed"."""
+    if not fsutil.exists(spark, f"{out_dir}/{stage}/_SUCCESS"):
         return False
-    n = (
-        lin.filter(
-            (F.col("stage") == stage)
-            & (F.col("status") == STATUS_COMMITTED)
-        ).limit(1).count()
-    )
-    if n == 0:
-        return False
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/{stage}/_SUCCESS")
-    return path.getFileSystem(jsc).exists(path)
+    ledger = lineage_dir(out_dir)
+    for name in fsutil.list_names(spark, ledger):
+        if name.startswith((".", "_")):
+            continue  # temp files, checksums, _SUCCESS — as Spark does
+        part = pq.read_table(
+            pa.BufferReader(fsutil.read_bytes(spark, f"{ledger}/{name}")),
+            columns=["stage", "status"],
+        )
+        if (stage, STATUS_COMMITTED) in zip(
+            part["stage"].to_pylist(), part["status"].to_pylist()
+        ):
+            return True
+    return False
 
 
 def run_stats(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -215,16 +266,11 @@ def ensure_lineage_fixture_local(
     """Materialize the pinned lineage ledger once (pyarrow, no Spark):
     <path>/_lineage/*.parquet, published atomically. Returns the
     out_dir whose _lineage subdir read_lineage/run_stats consume."""
-    import os
-
-    from datetime import datetime, timezone
-
     out_dir = lineage_fixture_path(version)
     ledger = lineage_dir(out_dir)
     marker = os.path.join(ledger, "_SUCCESS")
     if not os.path.exists(marker):
         import pandas as pd
-        import pyarrow as pa
 
         from kgp.synth import publish_fixture_parquet
 

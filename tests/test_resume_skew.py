@@ -1,5 +1,6 @@
 """Resumability (lineage + checkpoint skip) and skew handling (X6)."""
 
+import os
 import shutil
 
 import pytest
@@ -77,6 +78,153 @@ def test_half_written_stage_is_overwritten(spark, pages_path, tmp_path):
     r2 = build_kg_pipeline(spark, pages_path, out)
     assert "mentions" in r2.executed
     assert spark.read.parquet(mpath).count() > 3
+
+
+# ---------------------------------------------------------------------------
+# the lineage ledger: driver-only metadata I/O, hidden-temp-then-rename
+# publish, and ledgers left by Spark's own parquet writer
+# ---------------------------------------------------------------------------
+
+
+def test_ledger_calls_launch_no_spark_job(spark, pages_path, tmp_path):
+    """Footer counts, the append and the committed check — the ledger
+    work of every stage — run no Spark job."""
+    out = str(tmp_path / "o")
+    build_kg_pipeline(spark, pages_path, out, stop_after="docs")
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs_in_group(group, work):
+        sc.setJobGroup(group, group)
+        try:
+            res = work()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty(30_000)  # job-start events arrive async
+        return res, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    # control: the probe does see a job launched inside its group
+    _, control = jobs_in_group("ledger-control",
+                               lambda: spark.range(3).count())
+    assert control
+
+    def ledger_work():
+        counts = L.per_partition_counts(spark, f"{out}/docs")
+        L.append_lineage(spark, out, "r-nojob", "docs",
+                         L.STATUS_COMMITTED, L.now_s(), counts=counts)
+        return (counts, L.stage_committed(spark, out, "docs"),
+                L.stage_committed(spark, out, "mentions"))
+
+    (counts, docs_ok, mentions_ok), jobs = jobs_in_group(
+        "ledger-work", ledger_work
+    )
+    assert jobs == []
+    assert docs_ok and not mentions_ok
+    assert sum(c for _, c in counts) == spark.read.parquet(
+        f"{out}/docs"
+    ).count()
+
+
+def test_stage_committed_on_fresh_out_dir(spark, tmp_path):
+    out = str(tmp_path / "never_run")
+    assert not L.stage_committed(spark, out, "docs")
+    assert not os.path.exists(L.lineage_dir(out))
+
+
+def test_ledger_reads_back_as_lineage_schema(spark, tmp_path):
+    from datetime import datetime, timezone
+
+    out = str(tmp_path / "o")
+    t0 = datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=timezone.utc)
+    L.append_lineage(spark, out, "r1", "docs", L.STATUS_COMMITTED,
+                     t0.timestamp(), counts=[(0, 3), (1, 4)])
+    L.append_lineage(spark, out, "r1", "mentions", L.STATUS_FAILED,
+                     t0.timestamp(), error="boom")
+    lin = L.read_lineage(spark, out)
+    expected = spark.createDataFrame([], L.LINEAGE_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in expected
+    ]
+    rows = {(r["stage"], r["partition_id"]): r for r in lin.collect()}
+    assert rows[("docs", 1)]["rows_out"] == 4
+    assert rows[("mentions", None)]["error"] == "boom"
+    assert rows[("mentions", None)]["rows_out"] is None
+    # the instant survives the round trip (PySpark hands timestamps
+    # back as naive local time)
+    assert rows[("docs", 0)]["started_at"] == datetime.fromtimestamp(
+        t0.timestamp()
+    )
+
+
+def test_spark_written_ledger_still_resumes(spark, pages_path, tmp_path):
+    """An out_dir whose committed rows were written by Spark's parquet
+    writer (INT96 timestamps, .crc sidecars, _SUCCESS) resumes, and the
+    aggregating reads see the mixed ledger."""
+    from datetime import datetime, timezone
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "o")
+    build_kg_pipeline(spark, pages_path, out, stop_after="mentions")
+    ledger = L.lineage_dir(out)
+    shutil.rmtree(ledger)
+    t = datetime.now(timezone.utc)
+    spark.createDataFrame(
+        [("old-run", s, 0, 1, L.STATUS_COMMITTED, t, t, None)
+         for s in ("docs", "mentions")],
+        L.LINEAGE_SCHEMA,
+    ).write.parquet(ledger)
+    old = [n for n in os.listdir(ledger) if n.endswith(".parquet")]
+    assert os.path.exists(f"{ledger}/_SUCCESS") and old
+    assert pq.ParquetFile(f"{ledger}/{old[0]}").schema.column(
+        5
+    ).physical_type == "INT96"
+
+    r = build_kg_pipeline(spark, pages_path, out)
+    assert r.skipped == ["docs", "mentions"]
+    assert r.executed == ["capped", "triples", "entities"]
+    stats = {
+        (x["stage"], x["status"]): x["n_partitions"]
+        for x in L.run_stats(spark, out).collect()
+    }
+    assert stats[("docs", L.STATUS_COMMITTED)] == 1
+    assert stats[("docs", L.STATUS_SKIPPED)] == 1
+    assert stats[("mentions", L.STATUS_SKIPPED)] == 1
+    assert ("entities", L.STATUS_COMMITTED) in stats
+
+
+def test_hidden_temp_from_crashed_append_is_ignored(
+    spark, pages_path, tmp_path, monkeypatch
+):
+    """A kill between writing the ledger's hidden temp file and its
+    rename leaves the stage uncommitted, even with _SUCCESS present."""
+    from kgp import fsutil
+
+    out = str(tmp_path / "o")
+    build_kg_pipeline(spark, pages_path, out, stop_after="docs")
+    spark.read.parquet(f"{out}/docs").write.parquet(f"{out}/mentions")
+
+    def killed(*a, **kw):
+        raise RuntimeError("killed before the rename")
+
+    monkeypatch.setattr(fsutil, "rename", killed)
+    with pytest.raises(RuntimeError):
+        L.append_lineage(spark, out, "r-crash", "mentions",
+                         L.STATUS_COMMITTED, L.now_s(), counts=[(0, 3)])
+    monkeypatch.undo()
+    assert any(
+        n.startswith(".part-") and n.endswith(".tmp")
+        for n in os.listdir(L.lineage_dir(out))
+    )
+    assert os.path.exists(f"{out}/mentions/_SUCCESS")
+    assert not L.stage_committed(spark, out, "mentions")
+    assert L.read_lineage(spark, out).filter(
+        F.col("stage") == "mentions"
+    ).count() == 0
+    r = build_kg_pipeline(spark, pages_path, out)
+    assert r.skipped == ["docs"]
+    assert "mentions" in r.executed
 
 
 def test_salted_count_distinct_equals_plain(spark, pages_path):
