@@ -2,8 +2,8 @@
 4N executors; driver instruction: evidence with local[8] vs local[32]
 on the same input).
 
-Runs the flagship FUSED physical plan (and the composable operator
-chain for reference) over the SAME materialized pages parquet at two
+Runs the flagship KG plan (kgp.plans.pipeline — the one plan every
+entry point runs) over the SAME materialized pages parquet at two
 parallelism levels, each leg a FRESH JVM launched exactly as the north
 rule prescribes — ``spark-submit --py-files kgp.zip leg.py`` from a
 directory OUTSIDE the repo, so the package provably ships through
@@ -34,16 +34,14 @@ spark = get_spark("kgp-scaling", cores=n_cores,
                   extra_conf={"spark.sql.shuffle.partitions": str(n_cores),
                               "spark.ui.enabled": "false"})
 spark.sparkContext.setLogLevel("ERROR")
-from kgp.operators.ner import gazetteer_df, mentions_relational
 from kgp.operators.segment import extract_docs
-from kgp.operators.triples import build_entities, build_triples, cap_mentions
-from kgp.plans.pipeline import fused_capped_mentions, outputs_from_capped
+from kgp.plans.pipeline import capped_mentions, outputs_from_capped
 from pyspark import StorageLevel
 
 pages = spark.read.parquet(pages_path)
 
-def run_fused():
-    capped = fused_capped_mentions(pages).persist(
+def run():
+    capped = capped_mentions(extract_docs(pages)).persist(
         StorageLevel.MEMORY_AND_DISK)
     try:
         t, e = outputs_from_capped(capped)
@@ -51,26 +49,16 @@ def run_fused():
     finally:
         capped.unpersist()
 
-def run_composable():
-    docs = extract_docs(pages)
-    m = mentions_relational(docs, gazetteer_df(spark))
-    capped = cap_mentions(m).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        return build_triples(capped).count(), build_entities(capped).count()
-    finally:
-        capped.unpersist()
-
 out = {"cores": n_cores}
-for name, run in (("fused", run_fused), ("composable", run_composable)):
-    run()                      # warmup: codegen compile
-    best = None
-    for _ in range(3):         # min-of-3: sandbox VM CPU fluctuates
-        t0 = time.perf_counter()
-        nt, ne = run()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    out[name] = best
-    out["triples"] = nt
+run()                          # warmup: codegen compile
+best = None
+for _ in range(3):             # min-of-3: sandbox VM CPU fluctuates
+    t0 = time.perf_counter()
+    nt, ne = run()
+    dt = time.perf_counter() - t0
+    best = dt if best is None else min(best, dt)
+out["sec"] = best
+out["triples"] = nt
 print(json.dumps(out))
 spark.stop()
 """
@@ -155,19 +143,17 @@ def main() -> None:
         rounds.append(legs)
 
     def core_seconds(legs):
-        return legs[8]["fused"] * 8 + legs[32]["fused"] * 32
+        return legs[8]["sec"] * 8 + legs[32]["sec"] * 32
 
     best = min(rounds, key=core_seconds)
-    t8, t32 = best[8]["fused"], best[32]["fused"]
-    c8, c32 = best[8]["composable"], best[32]["composable"]
+    t8, t32 = best[8]["sec"], best[32]["sec"]
     speedup = t8 / t32
     efficiency = speedup / (32 / 8)
-    eff_c = (c8 / c32) / (32 / 8)
     per_round = [
         {
-            "sec_8c": round(r[8]["fused"], 3),
-            "sec_32c": round(r[32]["fused"], 3),
-            "efficiency": round((r[8]["fused"] / r[32]["fused"]) / 4, 3),
+            "sec_8c": round(r[8]["sec"], 3),
+            "sec_32c": round(r[32]["sec"], 3),
+            "efficiency": round((r[8]["sec"] / r[32]["sec"]) / 4, 3),
         }
         for r in rounds
     ]
@@ -182,9 +168,6 @@ def main() -> None:
         "sec_8c": round(t8, 3),
         "sec_32c": round(t32, 3),
         "speedup_8_to_32": round(speedup, 3),
-        "composable_sec_8c": round(c8, 3),
-        "composable_sec_32c": round(c32, 3),
-        "composable_efficiency": round(eff_c, 3),
         "per_round": per_round,
         "triples": results[32]["triples"],
     }
@@ -201,14 +184,13 @@ vs `local[32]` (4N) — each leg a fresh JVM launched with
 scratch directory, so the package provably ships through --py-files
 exactly as it would to a cluster.
 
-Job: the flagship FUSED physical plan (kgp/plans/pipeline.py, the
-production plan per PLANS.md) — pages({n_pages}) → in-row
+Job: the flagship KG plan (kgp/plans/pipeline.py, the one plan every
+entry point runs) — pages({n_pages}) → in-row
 segment/extract/NER/cap (S3/S4/F1/P3/A1/T4) → triples (J1/S6) +
 entities (S5), both outputs counted; the shared capped-mentions
 prefix is persisted once (MEMORY_AND_DISK) so the extraction stage
 runs once for the two output actions, mirroring the resumable
-pipeline's stage-boundary write. The composable operator chain is
-measured alongside for reference. Input parquet pre-materialized as
+pipeline's stage-boundary write. Input parquet pre-materialized as
 128 files so every leg runs multiple task waves (one file per slot
 would make the wide leg straggler-bound). Methodology: untimed
 codegen warmup; each subprocess takes min-of-3 timed runs; the two
@@ -221,13 +203,7 @@ readings: {per_round}.
 
 | pipeline | 8 cores (N) | 32 cores (4N) | speedup | efficiency |
 |---|---|---|---|---|
-| fused (flagship) | {t8:.3f}s ({n_pages / t8:,.0f} docs/s = {n_pages / t8 / 8:,.0f}/core) | {t32:.3f}s ({n_pages / t32:,.0f} docs/s = {n_pages / t32 / 32:,.0f}/core) | {speedup:.2f}× | **{efficiency:.3f}** |
-| composable chain | {c8:.3f}s ({n_pages / c8 / 8:,.0f}/core) | {c32:.3f}s ({n_pages / c32 / 32:,.0f}/core) | {c8 / c32:.2f}× | {(c8 / c32) / 4:.3f} |
-
-The composable chain is a reference lane, not the north-rule metric:
-its 32-core leg is the shortest timed window of the four and therefore
-the noisiest reading (0.67-1.03 across re-measurements of identical
-code on this box); the flagship fused plan is what ships.
+| flagship KG plan | {t8:.3f}s ({n_pages / t8:,.0f} docs/s = {n_pages / t8 / 8:,.0f}/core) | {t32:.3f}s ({n_pages / t32:,.0f} docs/s = {n_pages / t32 / 32:,.0f}/core) | {speedup:.2f}× | **{efficiency:.3f}** |
 
 The north-rule metric is docs/sec/executor: per-core throughput is
 flat-to-rising from N to 4N (the efficiency column is exactly the
@@ -243,7 +219,7 @@ integrates proportionally more of the host's slow CPU windows and its
 min-of-3 cannot fully escape them. Treat ≥1 as "indistinguishable
 from linear at this scale".
 
-Interpretation: in the fused plan everything up to the output dedups
+Interpretation: in the KG plan everything up to the output dedups
 is a single narrow codegen stage (scan → in-row segment/match/cap →
 explode); the only wide operations are the triple distinct and entity
 agg, both with map-side partial aggregation. Nothing serializes on the driver, so

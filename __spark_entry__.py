@@ -15,16 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """pages(sf0.001, 500 rows) → segments → mentions → triples."""
-    from kgp.operators.ner import gazetteer_df, mentions_relational
+    """pages(sf0.001, 500 rows) → segments → capped mentions →
+    triples."""
     from kgp.operators.segment import extract_docs
-    from kgp.operators.triples import build_triples, cap_mentions
+    from kgp.operators.triples import build_triples
+    from kgp.plans.pipeline import capped_mentions
     from kgp.synth import synth_pages
 
-    pages = synth_pages(spark, 500)
-    docs = extract_docs(pages)
-    mentions = mentions_relational(docs, gazetteer_df(spark))
-    return build_triples(cap_mentions(mentions))
+    docs = extract_docs(synth_pages(spark, 500))
+    return build_triples(capped_mentions(docs))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

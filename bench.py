@@ -11,9 +11,11 @@ because this microVM's effective CPU swings ~3× with host neighbors
 window and misreports a regression.
 
 Headline set:
-- kg_pipeline: pages → segments → mentions → cap → triples+entities on
-  the deterministic synthetic pages table at the sf-matched scale
-  (BASELINE.json metric — docs/sec reported as kg_docs_per_sec)
+- kg_pipeline: pages → segments → in-row gazetteer mentions + cap →
+  triples+entities (kgp.plans.pipeline, the plan every entry point
+  runs) on the deterministic synthetic pages table at the sf-matched
+  scale (BASELINE.json metric — docs/sec reported as kg_docs_per_sec)
+- kg_pipeline_arrow: the same cap over the Arrow/model extractor seam
 - a spread of oracle-gated relational queries at the driver sf
 """
 
@@ -33,13 +35,8 @@ def main() -> None:
     spark = get_spark("kgp-bench", cores=cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    from kgp.operators.ner import gazetteer_df, mentions_relational
     from kgp.operators.segment import extract_docs
-    from kgp.operators.triples import (
-        build_entities,
-        build_triples,
-        cap_mentions,
-    )
+    from kgp.plans.pipeline import capped_mentions, outputs_from_capped
     from kgp.queries import queries as all_queries
     from kgp.synth import pages_scale_for_sf, synth_pages
 
@@ -68,18 +65,15 @@ def main() -> None:
 
     def run_kg(pages_df):
         # triples AND entities fan out from the capped-mentions table;
-        # persist the shared prefix so the scan+join+cap executes once
-        # (kgp.checkpoint does the same via a stage-boundary parquet)
-        docs = extract_docs(pages_df)
-        mentions = mentions_relational(docs, gazetteer_df(spark))
-        capped = cap_mentions(mentions).persist(
+        # persist the shared prefix so the scan + extraction + cap
+        # executes once (kgp.checkpoint does the same via a
+        # stage-boundary parquet)
+        capped = capped_mentions(extract_docs(pages_df)).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            return (
-                build_triples(capped).count(),
-                build_entities(capped).count(),
-            )
+            t, e = outputs_from_capped(capped)
+            return t.count(), e.count()
         finally:
             capped.unpersist()
 
@@ -93,28 +87,18 @@ def main() -> None:
         "kg_pipeline", lambda: run_kg(pages)
     )
 
-    # fused single-shuffle physical plan (kgp.plans.pipeline)
-    from kgp.plans.pipeline import fused_capped_mentions, outputs_from_capped
+    # Arrow mapInPandas extractor (the real-model UDF shape) → same cap
+    from pyspark.sql import functions as F
 
-    def run_fused(pages_df):
-        capped = fused_capped_mentions(pages_df).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        try:
-            t, e = outputs_from_capped(capped)
-            return t.count(), e.count()
-        finally:
-            capped.unpersist()
-
-    fused_sec, (nt_f, _) = timed("kg_pipeline_fused", lambda: run_fused(pages))
-    assert nt_f == n_triples, "fused plan diverged from composable plan"
-
-    # Arrow mapInPandas extractor path (the real-model UDF shape)
-    from kgp.operators.ner import mentions_arrow
+    from kgp.operators.ner import mention_arrays_arrow
+    from kgp.operators.triples import build_triples
+    from kgp.plans.pipeline import cap_mention_array_col, explode_mentions
 
     def run_arrow(pages_df):
-        docs = extract_docs(pages_df)
-        capped = cap_mentions(mentions_arrow(docs))
+        arrays = mention_arrays_arrow(extract_docs(pages_df))
+        capped = explode_mentions(
+            arrays, cap_mention_array_col(F.col("mentions"))
+        )
         return build_triples(capped).count()
 
     _, nt_a = timed("kg_pipeline_arrow", lambda: run_arrow(pages))
@@ -217,7 +201,6 @@ def main() -> None:
                 "span_dedup_sec": span_dedup_sec,
                 "tfidf_sec": tfidf_sec,
                 "kg_docs_per_sec": round(n_pages / kg_sec, 1),
-                "kg_docs_per_sec_fused": round(n_pages / fused_sec, 1),
                 "kg_pages": n_pages,
                 "kg_triples": n_triples,
                 "kg_entities": n_entities,

@@ -25,9 +25,12 @@ milliseconds per stage, not a job per call. The same two-phase marker maps to
 an Iceberg snapshot-commit in a catalog deployment — this module is
 the writer seam (SURVEY §1.3).
 
-The full KG pipeline wired through the runner is build_kg_pipeline();
-tests kill it between stages and assert the resumed run skips committed
-stages and produces byte-identical final tables.
+The full KG pipeline wired through the runner is build_kg_pipeline():
+docs → capped → triples → entities, where `capped` is the one in-row
+extract-and-cap plan (kgp.plans.pipeline) — no join, no Window, no
+shuffle before the output dedups. Tests kill it between stages and
+assert the resumed run skips committed stages and produces
+byte-identical final tables.
 """
 
 from __future__ import annotations
@@ -106,21 +109,23 @@ def build_kg_pipeline(
 ) -> StageRunner:
     """The flagship pipeline as resumable stages:
 
-    pages → docs (S3/S4 byte-identical text) → mentions (F1/P3) →
-    capped (A1/T4) → triples (J1/S6) + entities (S5).
+    pages → docs (S3/S4 byte-identical text) → capped (F1/P3/A1/T4:
+    in-row gazetteer mentions + cap, kgp.plans.pipeline) → triples
+    (J1/S6) + entities (S5).
 
     `stop_after` simulates a crash at a stage boundary (tests).
-    Stage boundaries match SURVEY §3.1's Spark rebuild; intermediate
-    materialization is the price of resume — at 100 TB you pay one
-    extra parquet round-trip per stage and buy partition-level restart.
+    Intermediate materialization is the price of resume — at 100 TB
+    you pay one extra parquet round-trip per stage and buy stage-level
+    restart: a rerun skips every committed stage and recomputes the
+    first uncommitted one whole (partition-level restart is ROADMAP
+    item 5). An out_dir committed by the older five-stage layout
+    (docs → mentions → capped → …) resumes too: its `mentions/`
+    directory is simply never read, and `capped` rebuilds from `docs`
+    unless it was already committed.
     """
-    from kgp.operators.ner import gazetteer_df, mentions_relational
     from kgp.operators.segment import extract_docs
-    from kgp.operators.triples import (
-        build_entities,
-        build_triples,
-        cap_mentions,
-    )
+    from kgp.operators.triples import build_entities, build_triples
+    from kgp.plans.pipeline import capped_mentions
     from kgp.skew import repartition_by_url_hash
 
     runner = StageRunner(spark, out_dir, run_id)
@@ -135,14 +140,7 @@ def build_kg_pipeline(
     if stop_after == "docs":
         return runner
 
-    mentions = runner.stage(
-        "mentions",
-        lambda: mentions_relational(docs, gazetteer_df(spark)),
-    )
-    if stop_after == "mentions":
-        return runner
-
-    capped = runner.stage("capped", lambda: cap_mentions(mentions))
+    capped = runner.stage("capped", lambda: capped_mentions(docs))
     if stop_after == "capped":
         return runner
 

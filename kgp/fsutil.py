@@ -69,6 +69,16 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
         raise OSError(f"rename {src} -> {dst} failed")
 
 
+def local_path(spark: SparkSession, path: str) -> str | None:
+    """``path`` on the local filesystem (a plain path or a ``file:``
+    URI, resolved the way Hadoop resolves it), or None when it lives
+    on another FileSystem."""
+    fs, p = _fs(spark, path)
+    if fs.getUri().getScheme() != "file":
+        return None
+    return str(fs.makeQualified(p).toUri().getPath())
+
+
 def list_names(spark: SparkSession, dir_path: str) -> list[str]:
     """File names directly under ``dir_path``; [] when it does not
     exist (probed first, so a missing dir raises nothing in the

@@ -21,9 +21,12 @@ the three calls every stage makes — `stage_committed`,
 Spark write or read of a handful of rows is pure fixed job overhead
 (scheduling, a parquet commit of one file per task, schema inference)
 that used to cost more per pipeline run than any one stage's work.
-The ledger rows are built as one pyarrow table on the driver and all
-file access goes through the Hadoop FileSystem (`kgp.fsutil`), so
-hdfs:// and s3a:// outputs work exactly like local disk.
+The ledger rows are built as one pyarrow table on the driver and the
+ledger's file access goes through the Hadoop FileSystem (`kgp.fsutil`),
+so hdfs:// and s3a:// outputs work exactly like local disk. The one
+exception is `per_partition_counts` off the local filesystem: it lists
+through Hadoop but has no driver-side footer reader there, so it falls
+back to a data scan (see its docstring).
 
 Publish step (the crash-safety half owned here; the ordering against
 the stage output's `_SUCCESS` is in kgp.checkpoint):
@@ -45,7 +48,6 @@ aggregate. The aggregating reads (`read_lineage`, `run_stats`,
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 import uuid
@@ -85,6 +87,38 @@ def lineage_dir(out_dir: str) -> str:
     return f"{out_dir}/_lineage"
 
 
+def _part_files(spark: SparkSession, stage_path: str) -> list[str]:
+    """Visible parquet part files of a stage, relative to it and
+    sorted: the top level and one hive level down (``split=train/``)."""
+    files = []
+    for name in fsutil.list_names(spark, stage_path):
+        if name.startswith((".", "_")):
+            continue  # checksums, _SUCCESS, temp dirs — as Spark does
+        if name.endswith(".parquet"):
+            files.append(name)
+        elif "=" in name:
+            files += [
+                f"{name}/{n}"
+                for n in fsutil.list_names(spark, f"{stage_path}/{name}")
+                if n.endswith(".parquet") and not n.startswith((".", "_"))
+            ]
+    return sorted(files)
+
+
+def _scan_counts(
+    spark: SparkSession, stage_path: str
+) -> list[tuple[int, int]]:
+    """per_partition_counts by a data scan: a Spark job over the stage."""
+    by_file = (
+        spark.read.parquet(stage_path)
+        .groupBy(F.input_file_name().alias("_f"))
+        .count()
+        .orderBy("_f")
+        .collect()
+    )
+    return [(i, r["count"]) for i, r in enumerate(by_file)] or [(0, 0)]
+
+
 def per_partition_counts(
     spark: SparkSession, stage_path: str
 ) -> list[tuple[int, int]]:
@@ -95,36 +129,34 @@ def per_partition_counts(
     metadata read per file instead of a second full pass over the
     stage's data (at a 100 TB stage the data re-scan would double the
     stage's read volume; in an Iceberg deployment the snapshot summary
-    supplies these numbers outright). Falls back to a data scan only
-    when footers aren't reachable from the driver (remote FS without a
-    pyarrow filesystem)."""
-    try:
-        files = sorted(
-            glob.glob(os.path.join(stage_path, "*.parquet"))
-            + glob.glob(os.path.join(stage_path, "*", "*.parquet"))
-        )
-        if files:
-            counts = [pq.ParquetFile(f).metadata.num_rows for f in files]
-            # skip empty part files: the scan fallback (input_file_name
-            # groupBy) never sees them, so both paths report the same
-            # partition set
-            rows = [
-                (i, c)
-                for i, c in enumerate(c for c in counts if c > 0)
-            ]
-            return rows or [(0, 0)]
-    except (OSError, ValueError):
-        # ValueError covers pyarrow.lib.ArrowInvalid (corrupt footer) —
-        # fall through to the authoritative data scan
-        pass
-    df = spark.read.parquet(stage_path)
-    by_file = (
-        df.groupBy(F.input_file_name().alias("_f"))
-        .count()
-        .orderBy("_f")
-        .collect()
-    )
-    return [(i, r["count"]) for i, r in enumerate(by_file)] or [(0, 0)]
+    supplies these numbers outright). Part files are listed through
+    the Hadoop FileSystem, so a plain path and a ``file://`` URI find
+    the same files, and on the local filesystem pyarrow reads their
+    footers on the driver — no Spark job. Other schemes (hdfs://,
+    s3a://) and unreadable footers fall back to a data scan, a Spark
+    job over the stage that reports the same numbers."""
+    local = fsutil.local_path(spark, stage_path)
+    if local is not None:
+        try:
+            files = _part_files(spark, stage_path)
+            if files:
+                counts = [
+                    pq.ParquetFile(os.path.join(local, f)).metadata.num_rows
+                    for f in files
+                ]
+                # skip empty part files: the scan fallback
+                # (input_file_name groupBy) never sees them, so both
+                # paths report the same partition set
+                rows = [
+                    (i, c)
+                    for i, c in enumerate(c for c in counts if c > 0)
+                ]
+                return rows or [(0, 0)]
+        except (OSError, ValueError):
+            # ValueError covers pyarrow.lib.ArrowInvalid (corrupt
+            # footer) — fall through to the authoritative data scan
+            pass
+    return _scan_counts(spark, stage_path)
 
 
 def append_lineage(
@@ -237,7 +269,7 @@ def run_success_rates(spark: SparkSession, out_dir: str) -> DataFrame:
 # the same local parquet, like kgp.synth.materialize_pages for pages)
 # ---------------------------------------------------------------------------
 
-LINEAGE_FIXTURE_VERSION = "v1"
+LINEAGE_FIXTURE_VERSION = "v2"
 _LINEAGE_FIXTURE_DIR = "/tmp/kgp_lineage"
 
 # (run_id, stage, n_partitions, status, rows_base) — rows_out for
@@ -268,43 +300,32 @@ def ensure_lineage_fixture_local(
     out_dir whose _lineage subdir read_lineage/run_stats consume."""
     out_dir = lineage_fixture_path(version)
     ledger = lineage_dir(out_dir)
-    marker = os.path.join(ledger, "_SUCCESS")
-    if not os.path.exists(marker):
-        import pandas as pd
-
+    if not os.path.exists(os.path.join(ledger, "_SUCCESS")):
         from kgp.synth import publish_fixture_parquet
 
-        t0 = datetime(2024, 6, 1, 12, 0, 0, tzinfo=timezone.utc).replace(
-            tzinfo=None
-        )
-        rows = []
-        for run_id, stage, n_parts, status, base in _FIXTURE_SPEC:
-            for p in range(n_parts):
-                rows.append(
-                    {
-                        "run_id": run_id,
-                        "stage": stage,
-                        "partition_id": p,
-                        "rows_out": (
-                            base + 37 * p if base is not None else None
-                        ),
-                        "status": status,
-                        "started_at": t0,
-                        "finished_at": t0,
-                        "error": (
-                            "executor lost: exit 137"
-                            if status == STATUS_FAILED
-                            else None
-                        ),
-                    }
-                )
-        pdf = pd.DataFrame(rows)
-        pdf["partition_id"] = pdf["partition_id"].astype("int32")
-        pdf["rows_out"] = pdf["rows_out"].astype("Int64")
-        pdf["started_at"] = pdf["started_at"].astype("datetime64[us]")
-        pdf["finished_at"] = pdf["finished_at"].astype("datetime64[us]")
+        t0 = datetime(2024, 6, 1, 12, 0, 0, tzinfo=timezone.utc)
+        rows = [
+            (
+                run_id, stage, p,
+                base + 37 * p if base is not None else None,
+                status, t0, t0,
+                "executor lost: exit 137" if status == STATUS_FAILED
+                else None,
+            )
+            for run_id, stage, n_parts, status, base in _FIXTURE_SPEC
+            for p in range(n_parts)
+        ]
+        # the same arrow schema append_lineage writes, so Spark reads
+        # the fixture back as exactly LINEAGE_SCHEMA (UTC timestamps)
         publish_fixture_parquet(
-            ledger, pa.Table.from_pandas(pdf, preserve_index=False)
+            ledger,
+            pa.table(
+                {
+                    f.name: [r[i] for r in rows]
+                    for i, f in enumerate(_ARROW_SCHEMA)
+                },
+                schema=_ARROW_SCHEMA,
+            ),
         )
     return out_dir
 

@@ -4,26 +4,27 @@ Reference contract: ``extract_entities(text) -> List[str]`` keeping
 labels {PERSON, ORG, GPE, PRODUCT}
 (/root/reference/src/kg/entity_extraction.py:20-40). spaCy is optional
 (the reference itself degrades to ``[]`` without the model,
-entity_extraction.py:42-54), so extractors are pluggable:
+entity_extraction.py:42-54), so extractors are pluggable.
 
-* ``mentions_relational`` — gazetteer matching as a pure DataFrame
-  expression: broadcast the (tiny) gazetteer, ``locate`` on
-  space-padded text. 100 % JVM/codegen; the broadcast join never
-  shuffles the pages side. This is the scale path AND the semantics
-  shared with the DuckDB oracle (strpos on the same padding).
+Every extractor returns the same thing: one value per document, the
+mention list ``array<struct<surface,label,first_offset>>``
+(MENTION_ARRAY_TYPE), first_offset = 0-based char index of the
+surface's first whole-space-token occurrence in the document text.
+Keeping the list in-row is what lets the one cap
+(kgp.plans.pipeline.cap_mention_array_col: label filter, pinned
+first-occurrence order, cap 10 — gremlin_client.py:115) run with no
+Window and no shuffle, whichever extractor produced the list:
 
-* ``mentions_arrow`` — the same semantics as an Arrow-batched
-  ``mapInPandas`` (vectorized pandas ``str.find`` per surface across
-  the whole batch — no per-row Python loop over texts). This is the
-  shape a real transformer/spaCy NER takes (north-rule requirement);
-  ``SpacyMentionExtractor`` plugs in when the model is importable.
+* ``gazetteer_mentions_col`` — a JVM column: each gazetteer surface
+  unrolls into the projection as ``locate`` on the space-padded text.
+  100 % codegen, no join, no Python. This is the scale path AND the
+  semantics shared with the DuckDB oracle (strpos on the same padding).
 
-Both return the pre-cap `mentions` table:
-``(url, surface, label, first_offset)`` with first_offset = 0-based
-char index of the surface in the document text, matches being
-whole-space-token occurrences. Ordering/cap (A1: pinned
-first-occurrence order, cap 10 AFTER label filter —
-gremlin_client.py:115) live in kgp.operators.triples.
+* ``mention_arrays_arrow`` — the model seam: an Arrow-batched
+  ``mapInPandas`` returning the same array column (vectorized pandas
+  ``str.find`` per surface across the whole batch — no per-row Python
+  loop over texts). ``SpacyMentionExtractor`` plugs in here when the
+  model is importable.
 """
 
 from __future__ import annotations
@@ -31,109 +32,48 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kgp.gazetteer import PAGES_SURFACES
 
-
-def gazetteer_df(
-    spark: SparkSession, gaz: list[tuple[str, str]] | None = None
-) -> DataFrame:
-    return spark.createDataFrame(
-        gaz or PAGES_SURFACES, schema="surface string, label string"
-    )
+MENTION_ARRAY_TYPE = (
+    "array<struct<surface:string,label:string,first_offset:bigint>>"
+)
 
 
-def mentions_relational(
-    docs: DataFrame,
-    gaz_df: DataFrame,
-    id_col: str = "url",
-    text_col: str = "extracted_text",
-) -> DataFrame:
-    """Broadcast-join gazetteer matcher (JVM, no Python).
+def gazetteer_mentions_col(
+    text: Column, gaz: list[tuple[str, str]] | None = None
+) -> Column:
+    """MENTION_ARRAY_TYPE of the ``gaz`` surfaces found in ``text``, in
+    gazetteer order (the cap orders them).
 
     locate() is 1-based over the padded text ``' '||text||' '``; the
-    0-based offset into the unpadded text is locate-1-1+1 = locate-1
-    ... i.e. ``locate - 1`` (one for 1-based, the added leading pad
-    space is consumed by the ``' '+surface`` prefix).
+    0-based offset into the unpadded text is ``locate - 1`` (one for
+    1-based; the added leading pad space is consumed by the
+    ``' '+surface`` prefix). NULL text matches nothing.
     """
-    return (
-        docs.join(F.broadcast(gaz_df))
-        .withColumn(
-            "first_offset",
-            (
-                F.expr(
-                    "locate(concat(' ', surface, ' '), "
-                    f"concat(' ', {text_col}, ' '))"
+    gaz = PAGES_SURFACES if gaz is None else gaz
+    if not gaz:
+        # F.array() with zero elements has VOID element type and fails
+        # analysis inside the cap's lambdas — return a typed empty
+        return F.array().cast(MENTION_ARRAY_TYPE)
+    padded = F.concat(F.lit(" "), text, F.lit(" "))
+    return F.filter(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(s).alias("surface"),
+                    F.lit(lab).alias("label"),
+                    (F.locate(f" {s} ", padded) - 1)
+                    .cast("long")
+                    .alias("first_offset"),
                 )
-                - 1
-            ).cast("long"),
-        )
-        .filter(F.col("first_offset") >= 0)
-        .select(
-            F.col(id_col).alias("url"),
-            "surface",
-            "label",
-            "first_offset",
-        )
+                for s, lab in gaz
+            ]
+        ),
+        lambda m: m["first_offset"] >= 0,
     )
-
-
-def mentions_arrow(
-    docs: DataFrame,
-    gaz: list[tuple[str, str]] | None = None,
-    id_col: str = "url",
-    text_col: str = "extracted_text",
-) -> DataFrame:
-    """Arrow-batched extractor (mapInPandas) — vectorized str.find per
-    gazetteer surface across each batch; no per-row Python."""
-    gaz = gaz or PAGES_SURFACES
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL text ⇒ no match (parity with the relational path,
-            # where locate() on NULL filters out); without fillna the
-            # nullable-string dtype propagates pd.NA through `pos >= 0`
-            # and the boolean mask raises
-            padded = " " + pdf[text_col].astype("string").fillna("") + " "
-            frames = []
-            for surface, label in gaz:
-                pos = padded.str.find(" " + surface + " ")
-                hit = pos >= 0
-                if hit.any():
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "url": pdf.loc[hit, id_col].astype(str),
-                                "surface": surface,
-                                "label": label,
-                                "first_offset": pos[hit].astype("int64"),
-                            }
-                        )
-                    )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {
-                        "url": pd.Series([], dtype=str),
-                        "surface": pd.Series([], dtype=str),
-                        "label": pd.Series([], dtype=str),
-                        "first_offset": pd.Series([], dtype="int64"),
-                    }
-                )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        extract,
-        schema="url string, surface string, label string, first_offset long",
-    )
-
-
-MENTION_ARRAY_SCHEMA = (
-    "url string, mentions array<struct<"
-    "surface:string,label:string,first_offset:bigint>>"
-)
 
 
 def mention_arrays_arrow(
@@ -142,25 +82,24 @@ def mention_arrays_arrow(
     id_col: str = "url",
     text_col: str = "extracted_text",
 ) -> DataFrame:
-    """One row per doc: (url, mentions array<struct<surface,label,
-    first_offset>>) — the model-extractor UDF contract
-    (/root/reference/src/kg/base.py:4-7 returns the per-document
-    mention list; here it lands as an Arrow struct array instead of
-    exploded rows).
+    """One row per doc: (``id_col``, mentions MENTION_ARRAY_TYPE) — the
+    model-extractor UDF contract (/root/reference/src/kg/base.py:4-7
+    returns the per-document mention list; here it lands as an Arrow
+    struct array).
 
-    This is the shape kgp.plans.pipeline.cap_mention_array_col picks
-    up from: because the array stays in-row, the downstream label
-    filter + first-occurrence cap needs NO Window and NO shuffle —
-    exactly the fused-plan property of the relational gazetteer path.
-    The extraction itself is the same vectorized str.find batch loop
-    as mentions_arrow; a real model (SpacyMentionExtractor.
+    Same matches as gazetteer_mentions_col, computed by a vectorized
+    str.find batch loop; a real model (SpacyMentionExtractor.
     extract_batch) slots in by replacing the inner loop, returning the
     same list-of-(surface, label, offset) per document.
     """
-    gaz = gaz or PAGES_SURFACES
+    gaz = PAGES_SURFACES if gaz is None else gaz
+    id_type = docs.schema[id_col].dataType.simpleString()
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            # NULL text ⇒ no match (parity with locate() on NULL);
+            # without fillna the nullable-string dtype propagates pd.NA
+            # through `pos >= 0`
             padded = " " + pdf[text_col].astype("string").fillna("") + " "
             per_doc: list[list[dict]] = [[] for _ in range(len(pdf))]
             for surface, label in gaz:
@@ -174,15 +113,10 @@ def mention_arrays_arrow(
                                 "first_offset": int(p),
                             }
                         )
-            yield pd.DataFrame(
-                {
-                    "url": pdf[id_col].astype(str),
-                    "mentions": per_doc,
-                }
-            )
+            yield pd.DataFrame({id_col: pdf[id_col], "mentions": per_doc})
 
     return docs.select(id_col, text_col).mapInPandas(
-        extract, schema=MENTION_ARRAY_SCHEMA
+        extract, schema=f"`{id_col}` {id_type}, mentions {MENTION_ARRAY_TYPE}"
     )
 
 

@@ -13,14 +13,14 @@ Reference: /root/reference/src/kg/gremlin_client.py:102-135 —
   on entity_id; edge upsert keyed (source, target, label)
   (gremlin_client.py:86-99) → dropDuplicates on (subj, pred, obj).
 
-Scale notes: the per-document cap is a collect_list aggregation with
-in-row sort/slice (map-side partial aggregation; one packed row per
-doc crosses the shuffle) — see cap_mentions. When mentions come
-straight from the in-row extractor the cap disappears entirely into
-the row (plans.pipeline.build_kg_fused). Entity-node dedup is a
-shuffle on entity_id — head entities are hot keys, but the groupBy
-does map-side partial aggregation so the skew reaching the reduce
-side is one row per (partition, key).
+Input is the capped-mentions table ``(doc, surface, label,
+first_offset)`` that kgp.plans.pipeline builds in-row (extractor array
+→ cap_mention_array_col → explode), so the label filter and per-doc
+cap cost no shuffle before these builders run. Each output is one
+dedup: triples a HashAggregate distinct on (subj, pred, obj); entity
+nodes a groupBy on entity_id — head entities are hot keys, but the
+groupBy does map-side partial aggregation so the skew reaching the
+reduce side is one row per (partition, key).
 """
 
 from __future__ import annotations
@@ -28,12 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kgp.constants import (
-    CONTENT_TRUNCATE_CHARS,
-    ENTITY_LABELS,
-    MAX_ENTITIES_PER_DOC,
-    PRED_CONTAINS_ENTITY,
-)
+from kgp.constants import CONTENT_TRUNCATE_CHARS, PRED_CONTAINS_ENTITY
 
 
 def normalize_entity_id(surface: Column) -> Column:
@@ -73,43 +68,6 @@ def normalize_entity_id_py(surface: Column) -> Column:
     # resolved by pyspark's signature inspection
     _norm.__annotations__ = {"s": pd.Series, "return": pd.Series}
     return pandas_udf(_norm, "string")(surface)
-
-
-def cap_mentions(mentions: DataFrame, doc_col: str = "url") -> DataFrame:
-    """Label filter → pinned order → per-doc cap (A1/T4/P3).
-
-    Physical shape: groupBy(doc).collect_list(struct) + in-row
-    sort_array/slice/explode — NOT a row_number window. collect_list
-    partially aggregates map-side, so the shuffle carries one packed
-    row per document instead of every mention (a window has no partial
-    aggregation and shuffles the full mentions table). Per-doc state is
-    bounded (mentions per doc ≤ gazetteer size / extractor output).
-    sort_array orders by struct fields in declaration order —
-    (first_offset, surface) is exactly the A1 pinned order.
-    """
-    packed = (
-        mentions.filter(F.col("label").isin(*ENTITY_LABELS))
-        .groupBy(doc_col)
-        .agg(
-            F.collect_list(
-                F.struct("first_offset", "surface", "label")
-            ).alias("_ms")
-        )
-    )
-    return (
-        packed.select(
-            doc_col,
-            F.explode(
-                F.slice(F.sort_array("_ms"), 1, MAX_ENTITIES_PER_DOC)
-            ).alias("_m"),
-        )
-        .select(
-            doc_col,
-            F.col("_m.surface").alias("surface"),
-            F.col("_m.label").alias("label"),
-            F.col("_m.first_offset").alias("first_offset"),
-        )
-    )
 
 
 def build_triples(capped_mentions: DataFrame, doc_col: str = "url") -> DataFrame:

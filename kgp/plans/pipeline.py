@@ -1,29 +1,28 @@
-"""Fused physical plan for the flagship KG pipeline.
+"""The one physical plan for the flagship KG pipeline.
 
-The composable path (kgp.operators.*) is: broadcast-join docs ×
-gazetteer → filter hits → window(rank per doc) → cap → triples. Two
-costs at 100 TB: the join inflates each doc row |gazetteer|× before
-filtering, and the per-doc cap is a full shuffle of the mentions table
-on doc key (row_number window).
+Every Spark path that builds capped mentions — the checkpointed batch
+pipeline, the streaming micro-batch, the oracle-gated queries, the
+bench — runs the same two steps:
 
-The fused plan computes per-document mentions AND the first-occurrence
-cap entirely inside the row with JVM higher-order functions — the
-gazetteer rides into codegen as a literal array (it is a broadcast
-variable in spirit; Catalyst constant-folds it), so the only remaining
-wide operations in pages→triples are the output dedups:
+1. an extractor column yields each document's mention list
+   ``array<struct<surface,label,first_offset>>``
+   (kgp.operators.ner: the JVM ``gazetteer_mentions_col``, or the
+   Arrow/model seam ``mention_arrays_arrow``);
+2. ``cap_mention_array_col`` applies the A1/P3 cap to that array
+   in-row, and ``explode_mentions`` turns it into
+   ``(id, surface, label, first_offset)`` rows.
 
-    scan → [transform/filter/sort_array/slice in-row] → explode →
-    dropDuplicates
+Both steps are narrow, so the only wide operations in pages→triples
+are the output dedups of kgp.operators.triples:
 
-Semantics are IDENTICAL to the composable path (asserted in
-tests/test_fused_plan.py): label filter before cap
-(entity_extraction.py:30 then gremlin_client.py:115), first-occurrence
-order with (first_offset, surface) tie-break, cap MAX_ENTITIES_PER_DOC.
+    scan → [extract, filter/sort_array/slice in-row] → explode →
+    distinct (triples) / groupBy (entities)
 
-When the extractor is a real model (spaCy/transformer pandas UDF), the
-same fusion applies after the UDF: the UDF returns the per-row mention
-array and this module's cap/sort/slice picks up from there — the cap
-shuffle disappears in both worlds.
+Semantics: label filter before cap (entity_extraction.py:30 then
+gremlin_client.py:115), first-occurrence order with
+(first_offset, surface) tie-break, cap MAX_ENTITIES_PER_DOC — pinned
+against the DuckDB twins (row_number over the same order) and
+kgp.oracle in tests/test_fused_plan.py and tests/test_ner_triples.py.
 """
 
 from __future__ import annotations
@@ -33,67 +32,22 @@ from pyspark.sql import functions as F
 
 from kgp.constants import ENTITY_LABELS, MAX_ENTITIES_PER_DOC
 from kgp.gazetteer import PAGES_SURFACES
-
-
-def capped_mentions_col(
-    text: Column, gaz: list[tuple[str, str]] | None = None
-) -> Column:
-    """ARRAY<STRUCT<surface,label,first_offset>> — label-filtered,
-    first-occurrence-ordered, capped — computed in-row.
-
-    sort_array on STRUCT orders by fields in declaration order, so the
-    struct is laid out (first_offset, surface, label) for the A1 pinned
-    order, then re-projected.
-    """
-    gaz = gaz or PAGES_SURFACES
-    kept = [(s, lab) for s, lab in gaz if lab in ENTITY_LABELS]
-    out_t = "array<struct<surface:string,label:string,first_offset:bigint>>"
-    if not kept:
-        # F.array() with zero elements has VOID element type and fails
-        # analysis inside the filter lambda — return a typed empty
-        return F.array().cast(out_t)
-    padded = F.concat(F.lit(" "), text, F.lit(" "))
-    hits = F.filter(
-        F.array(
-            *[
-                F.struct(
-                    (
-                        F.locate(f" {s} ", padded) - 1
-                    ).cast("long").alias("first_offset"),
-                    F.lit(s).alias("surface"),
-                    F.lit(lab).alias("label"),
-                )
-                for s, lab in kept  # P3 folded at plan build time
-            ]
-        ),
-        lambda m: m["first_offset"] >= 0,
-    )
-    return F.transform(
-        F.slice(F.sort_array(hits), 1, MAX_ENTITIES_PER_DOC),
-        lambda m: F.struct(
-            m["surface"].alias("surface"),
-            m["label"].alias("label"),
-            m["first_offset"].alias("first_offset"),
-        ),
-    )
+from kgp.operators.ner import gazetteer_mentions_col
+from kgp.operators.triples import build_entities, build_triples
 
 
 def cap_mention_array_col(mentions: Column) -> Column:
-    """The A1/P3 cap applied to an ALREADY-EXTRACTED mention array
-    (``array<struct<surface,label,first_offset>>`` — the natural
-    output shape of a model extractor UDF): label filter, pinned
-    (first_offset, surface) first-occurrence order, cap at
+    """The A1/P3 cap on a per-document mention array: label filter,
+    pinned (first_offset, surface) first-occurrence order, cap at
     MAX_ENTITIES_PER_DOC — all in-row JVM higher-order functions, so
     the cap costs no Window and no shuffle regardless of where the
     mentions came from.
 
-    This is the "same fusion applies after the UDF" path: gazetteer
-    extraction folds the label filter at plan build
-    (capped_mentions_col), a model UDF can't, so it runs here as an
-    array filter. Semantics are identical — filter before cap
-    (entity_extraction.py:30 then gremlin_client.py:102-135), sort on
-    a re-laid-out (first_offset, surface, label) struct for the pinned
-    tie-break, slice, re-project.
+    Filter before cap (entity_extraction.py:30 then
+    gremlin_client.py:102-135); sort_array on STRUCT orders by fields
+    in declaration order, so the struct is re-laid-out as
+    (first_offset, surface, label) for the pinned tie-break, sliced,
+    then re-projected.
     """
     kept = F.filter(
         mentions, lambda m: m["label"].isin(list(ENTITY_LABELS))
@@ -116,86 +70,41 @@ def cap_mention_array_col(mentions: Column) -> Column:
     )
 
 
-def fused_capped_mentions(
-    pages: DataFrame, gaz: list[tuple[str, str]] | None = None
+def explode_mentions(
+    df: DataFrame, mentions: Column, id_col: str = "url"
 ) -> DataFrame:
-    """(url, surface, label, first_offset) — the fused narrow pass.
-
-    This is the shared prefix of BOTH pipeline outputs. Callers that
-    consume triples AND entities should materialize it once
-    (persist / stage-boundary parquet, as kgp.checkpoint does) so the
-    scan + in-row extraction doesn't execute per downstream action —
-    at 100 TB the capped table is ~cap×|docs| short rows, far smaller
-    than the page scan it replaces.
-    """
-    from kgp.operators.segment import with_segments
-
-    docs = with_segments(pages).select(
-        "url", F.col("extracted_text").alias("_t")
+    """(``id_col``, surface, label, first_offset): one row per element
+    of a per-document mention array column over ``df``."""
+    return df.select(id_col, F.explode(mentions).alias("_m")).select(
+        id_col, "_m.surface", "_m.label", "_m.first_offset"
     )
-    return docs.select(
-        "url", F.explode(capped_mentions_col(F.col("_t"), gaz)).alias("m")
-    ).select(
-        "url",
-        F.col("m.surface").alias("surface"),
-        F.col("m.label").alias("label"),
-        F.col("m.first_offset").alias("first_offset"),
+
+
+def capped_mentions(
+    docs: DataFrame,
+    gaz: list[tuple[str, str]] | None = None,
+    id_col: str = "url",
+    text_col: str = "extracted_text",
+) -> DataFrame:
+    """(``id_col``, surface, label, first_offset) — the capped mentions
+    of ``docs`` from the JVM gazetteer extractor: one narrow pass.
+
+    The label filter also folds into the gazetteer at plan build
+    (decoy surfaces are never located); the cap's own filter keeps it
+    exact for any array. Callers consuming triples AND entities should
+    materialize this once (a stage boundary, as kgp.checkpoint does,
+    or a persist) so the scan + extraction doesn't run per output.
+    """
+    gaz = PAGES_SURFACES if gaz is None else gaz
+    kept = [(s, lab) for s, lab in gaz if lab in ENTITY_LABELS]
+    return explode_mentions(
+        docs,
+        cap_mention_array_col(gazetteer_mentions_col(F.col(text_col), kept)),
+        id_col,
     )
 
 
 def outputs_from_capped(capped: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(triples, entities) from a capped-mentions table (possibly
     persisted / re-read from a stage boundary)."""
-    from kgp.operators.triples import normalize_entity_id
-
-    subj = F.concat(F.lit("page:"), F.col("url"))
-    obj = normalize_entity_id(F.col("surface"))
-    triples = (
-        capped.select(
-            subj.alias("subj"),
-            F.lit("contains_entity").alias("pred"),
-            obj.alias("obj"),
-        )
-        .distinct()  # HashAggregate; edge_id derived after (see triples.py)
-        .withColumn(
-            "edge_id",
-            F.concat_ws(
-                "", F.lit("edge:"), F.col("subj"), F.lit(":"),
-                F.col("obj"), F.lit(":contains_entity"),
-            ),
-        )
-    )
-    entities = (
-        capped.select(
-            normalize_entity_id(F.col("surface")).alias("entity_id"),
-            F.col("surface").alias("name0"),
-            F.col("label").alias("type0"),
-        )
-        .groupBy("entity_id")
-        .agg(F.min("name0").alias("name"), F.min("type0").alias("type"))
-        .select(
-            "entity_id", "name", F.lit("Entity").alias("label"), "type",
-            F.lit(None).cast("string").alias("canonical_id"),
-        )
-    )
-    return triples, entities
-
-
-def build_kg_fused(
-    pages: DataFrame, gaz: list[tuple[str, str]] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(triples, entities) from pages in one narrow pass + two dedups.
-
-    F.locate is not a HOF-lambda-capable builtin for per-element
-    surfaces, so the gazetteer unrolls into the projection — fine for
-    dictionary gazetteers (10²–10³ literals); beyond that the Arrow
-    UDF extractor path (kgp.operators.ner.mentions_arrow) takes over
-    with the same in-row cap.
-
-    NOTE: the two returned frames share the fused extraction prefix as
-    an unmaterialized plan — executing both re-runs the page scan.
-    Consumers of both outputs should use fused_capped_mentions +
-    outputs_from_capped around a persist (see bench.py) or a stage
-    write (kgp.checkpoint).
-    """
-    return outputs_from_capped(fused_capped_mentions(pages, gaz))
+    return build_triples(capped), build_entities(capped)

@@ -15,11 +15,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgp.constants import ENTITY_LABELS, MAX_ENTITIES_PER_DOC
 from kgp.gazetteer import DOCS_GAZETTEER, sql_values
+from kgp.operators.ner import gazetteer_mentions_col
+from kgp.operators.triples import build_entities
+from kgp.plans.pipeline import capped_mentions, explode_mentions
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -179,7 +182,9 @@ _GAZ_SQL = sql_values(DOCS_GAZETTEER)
 
 # mentions CTE shared by several oracles: whole-token gazetteer match
 # with 0-based first offset (strpos is 1-based; locate likewise on the
-# Spark side — kgp.operators.ner.mentions_relational).
+# Spark side — kgp.operators.ner.gazetteer_mentions_col), capped by a
+# row_number window here and by the in-row
+# kgp.plans.pipeline.cap_mention_array_col on the Spark side.
 _MENTIONS_CTE = f"""
 WITH mentions AS (
   SELECT d.doc_id,
@@ -200,37 +205,25 @@ capped AS (
 
 
 def _doc_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast gazetteer match over `documents` (JVM-side locate)."""
+    """(doc_id, surface, label, first_offset): every DOCS_GAZETTEER
+    hit in `documents`, uncapped — the gazetteer extractor column,
+    exploded."""
     docs = _t(spark, sf_dir, "documents")
-    gaz = spark.createDataFrame(
-        DOCS_GAZETTEER, schema="surface string, label string"
-    )
-    return (
-        docs.join(F.broadcast(gaz))
-        .withColumn(
-            "first_offset",
-            (
-                F.expr(
-                    "locate(concat(' ', surface, ' '), "
-                    "concat(' ', text, ' '))"
-                )
-                - 1
-            ).cast("long"),
-        )
-        .filter(F.col("first_offset") >= 0)
-        .select("doc_id", "surface", "label", "first_offset")
+    return explode_mentions(
+        docs,
+        gazetteer_mentions_col(F.col("text"), DOCS_GAZETTEER),
+        "doc_id",
     )
 
 
 def _doc_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("first_offset").asc(), F.col("surface").asc()
-    )
-    return (
-        _doc_mentions(spark, sf_dir)
-        .filter(F.col("label").isin(*ENTITY_LABELS))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= MAX_ENTITIES_PER_DOC)
+    """(doc_id, surface, label, first_offset) after the per-doc cap —
+    the same one plan as the pages pipeline, over `documents`."""
+    return capped_mentions(
+        _t(spark, sf_dir, "documents"),
+        DOCS_GAZETTEER,
+        id_col="doc_id",
+        text_col="text",
     )
 
 
@@ -295,18 +288,8 @@ GROUP BY 1
     tier=0,
 )
 def q_kg_entities(spark, sf_dir):
-    capped = _doc_capped(spark, sf_dir)
-    return (
-        capped.select(
-            F.concat(
-                F.lit("entity:"),
-                F.regexp_replace(F.lower(F.col("surface")), " ", "_"),
-            ).alias("entity_id"),
-            F.col("surface").alias("name0"),
-            F.col("label").alias("type0"),
-        )
-        .groupBy("entity_id")
-        .agg(F.min("name0").alias("name"), F.min("type0").alias("type"))
+    return build_entities(_doc_capped(spark, sf_dir)).select(
+        "entity_id", "name", "type"
     )
 
 

@@ -1664,7 +1664,9 @@ def q_embedding_monthly_centroid(spark, sf_dir):
 
 from kgp.constants import ENTITY_LABELS, MAX_ENTITIES_PER_DOC
 from kgp.gazetteer import DOCS_GAZETTEER
+from kgp.operators.ner import gazetteer_mentions_col
 from kgp.operators.triples import normalize_entity_id
+from kgp.plans.pipeline import explode_mentions
 from kgp.queries import _GAZ_SQL, _LABELS_SQL, _doc_capped
 
 # a fixed "LLM question" over the documents vocabulary; 'query' is an
@@ -1710,17 +1712,15 @@ def q_kg_entity_union(spark, sf_dir):
         .distinct()
     )
     split_ents = eids.join(spark_docs, "doc_id").select("entity_id")
-    gaz = spark.createDataFrame(
-        DOCS_GAZETTEER, schema="surface string, label string"
-    )
+    # the question side runs the same gazetteer extractor column over a
+    # one-row literal (label filter, no cap — llm.py:55-67)
     q_ents = (
-        gaz.filter(F.col("label").isin(*ENTITY_LABELS))
-        .filter(
-            F.expr(
-                "locate(concat(' ', surface, ' '), "
-                f"' {_QUESTION} ') > 0"
-            )
+        explode_mentions(
+            spark.range(1),
+            gazetteer_mentions_col(F.lit(_QUESTION), DOCS_GAZETTEER),
+            "id",
         )
+        .filter(F.col("label").isin(*ENTITY_LABELS))
         .select(normalize_entity_id(F.col("surface")).alias("entity_id"))
     )
     return q_ents.union(split_ents).distinct()

@@ -19,14 +19,13 @@ from pyspark.sql import functions as F
 
 from kgp.constants import ENTITY_LABELS, MAX_ENTITIES_PER_DOC
 from kgp.gazetteer import ALIAS_DICT, PAGES_SURFACES
-from kgp.operators.ner import gazetteer_df, mentions_relational
 from kgp.operators.segment import extract_docs, segment_pages
 from kgp.operators.triples import (
     build_entities,
     build_triples,
-    cap_mentions,
     truncate_content,
 )
+from kgp.plans.pipeline import capped_mentions
 from kgp.queries import register
 from kgp.synth import (
     materialize_pages,
@@ -268,8 +267,7 @@ def q_pages_triples(spark, sf_dir):
     """The flagship output: (subj, pred, obj, edge_id) triples
     (gremlin_client.py:102-135) from the full pages pipeline."""
     docs = extract_docs(_pages(spark, sf_dir))
-    m = mentions_relational(docs, gazetteer_df(spark))
-    return build_triples(cap_mentions(m))
+    return build_triples(capped_mentions(docs))
 
 
 @register(
@@ -287,8 +285,7 @@ def q_pages_entities(spark, sf_dir):
     name/type; canonical_id coalesced to '' because the driver's
     canonicalizer cannot sort NULL against strings)."""
     docs = extract_docs(_pages(spark, sf_dir))
-    m = mentions_relational(docs, gazetteer_df(spark))
-    return build_entities(cap_mentions(m)).withColumn(
+    return build_entities(capped_mentions(docs)).withColumn(
         "canonical_id", F.lit("")
     )
 
@@ -339,10 +336,8 @@ def q_pages_segment_triples(spark, sf_dir):
         ).alias("seg_id"),
         F.col("text"),
     )
-    m = mentions_relational(
-        segs, gazetteer_df(spark), id_col="seg_id", text_col="text"
-    ).withColumnRenamed("url", "seg_id")
-    return build_triples(cap_mentions(m, doc_col="seg_id"), doc_col="seg_id")
+    capped = capped_mentions(segs, id_col="seg_id", text_col="text")
+    return build_triples(capped, doc_col="seg_id")
 
 
 # ---------------------------------------------------------------------------
@@ -464,7 +459,6 @@ def q_pages_linked(spark, sf_dir):
     from kgp.operators.linking import link_mentions
 
     docs = extract_docs(_pages(spark, sf_dir))
-    m = mentions_relational(docs, gazetteer_df(spark))
     alias = spark.createDataFrame(
         [(s, c) for s, _, c in ALIAS_DICT],
         "surface string, canonical_id string",
@@ -473,7 +467,7 @@ def q_pages_linked(spark, sf_dir):
     # the LSH path); the oracle INNER-joins the alias dict. Filter the
     # NULLs so the twins match structurally, not by the data
     # coincidence that every gazetteer surface currently has an alias.
-    return link_mentions(cap_mentions(m), alias).filter(
+    return link_mentions(capped_mentions(docs), alias).filter(
         F.col("canonical_id").isNotNull()
     )
 
@@ -502,8 +496,7 @@ def q_pages_canonical(spark, sf_dir):
     from kgp.operators.canon import canonicalize_with_alias
 
     docs = extract_docs(_pages(spark, sf_dir))
-    m = mentions_relational(docs, gazetteer_df(spark))
-    ents = build_entities(cap_mentions(m))
+    ents = build_entities(capped_mentions(docs))
     alias = spark.createDataFrame(
         [(s, c) for s, _, c in ALIAS_DICT],
         "surface string, canonical_id string",
@@ -613,9 +606,8 @@ def q_pages_video_info(spark, sf_dir):
     segment count, duration (0.5 s/token derivation), and the distinct
     entity count across the page's capped mentions."""
     docs = extract_docs(_pages(spark, sf_dir))
-    m = mentions_relational(docs, gazetteer_df(spark))
     ne = (
-        cap_mentions(m)
+        capped_mentions(docs)
         .groupBy("url")
         .agg(F.countDistinct("surface").alias("n_entities"))
     )
@@ -659,9 +651,8 @@ def q_pages_corpus_stats(spark, sf_dir):
 
     pages = _pages(spark, sf_dir)
     docs = extract_docs(pages)
-    m = mentions_relational(docs, gazetteer_df(spark))
     ents = (
-        cap_mentions(m)
+        capped_mentions(docs)
         .select(normalize_entity_id(F.col("surface")).alias("eid"))
         .agg(F.countDistinct("eid").alias("total_entities"))
     )

@@ -40,14 +40,11 @@ def stream_pages(spark: SparkSession, pages_dir: str) -> DataFrame:
 
 def triples_for_batch(batch_df: DataFrame) -> DataFrame:
     """The batch pipeline applied to one micro-batch (shared code)."""
-    from kgp.operators.ner import gazetteer_df, mentions_relational
     from kgp.operators.segment import extract_docs
-    from kgp.operators.triples import build_triples, cap_mentions
+    from kgp.operators.triples import build_triples
+    from kgp.plans.pipeline import capped_mentions
 
-    spark = batch_df.sparkSession
-    docs = extract_docs(batch_df)
-    mentions = mentions_relational(docs, gazetteer_df(spark))
-    return build_triples(cap_mentions(mentions))
+    return build_triples(capped_mentions(extract_docs(batch_df)))
 
 
 def _read_sink(spark: SparkSession, out_dir: str) -> DataFrame | None:

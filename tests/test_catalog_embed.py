@@ -34,9 +34,12 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
     side — the J2 endpoint-resolution join co-located at write time.
     The same files read as plain parquet LOSE the layout and shuffle,
     proving the bucket metadata (not luck) removes the exchanges."""
-    from kgp.plans.pipeline import build_kg_fused
+    from kgp.operators.segment import extract_docs
+    from kgp.plans.pipeline import capped_mentions, outputs_from_capped
 
-    triples, entities = build_kg_fused(synth_pages(spark, 80))
+    triples, entities = outputs_from_capped(
+        capped_mentions(extract_docs(synth_pages(spark, 80)))
+    )
     cat = Catalog(str(tmp_path))
     cat.write_bucketed(triples, "triples_b", 8, ["obj"])
     cat.write_bucketed(entities, "entities_b", 8, ["entity_id"])

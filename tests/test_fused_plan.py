@@ -1,89 +1,104 @@
-"""Fused in-row plan ≡ composable plan, with fewer shuffles."""
+"""The one KG plan: both extractors → the one in-row cap ≡ kgp.oracle,
+with a single shuffle in pages→triples."""
 
 from pyspark.sql import functions as F
 
-from kgp.operators.ner import (
-    gazetteer_df,
-    mention_arrays_arrow,
-    mentions_relational,
-)
+from kgp import oracle
+from kgp.constants import ENTITY_LABELS, MAX_ENTITIES_PER_DOC
+from kgp.gazetteer import PAGES_SURFACES
+from kgp.operators.ner import mention_arrays_arrow
 from kgp.operators.segment import extract_docs
-from kgp.operators.triples import build_entities, build_triples, cap_mentions
 from kgp.plans.pipeline import (
-    build_kg_fused,
     cap_mention_array_col,
+    capped_mentions,
+    explode_mentions,
     outputs_from_capped,
 )
 from kgp.synth import synth_pages
 
 
-def _composable(spark, pages):
-    docs = extract_docs(pages)
-    capped = cap_mentions(
-        mentions_relational(docs, gazetteer_df(spark))
-    )
-    return build_triples(capped), build_entities(capped)
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
-def test_fused_equals_composable(spark):
-    pages = synth_pages(spark, 400).cache()
-    t_ref, e_ref = _composable(spark, pages)
-    t_fused, e_fused = build_kg_fused(pages)
-    assert sorted(map(tuple, t_ref.collect())) == \
-           sorted(map(tuple, t_fused.collect()))
-    assert sorted(map(tuple, e_ref.collect())) == \
-           sorted(map(tuple, e_fused.collect()))
-    pages.unpersist()
-
-
-def test_fused_triples_single_shuffle(spark):
-    """pages→triples fused: exactly one hash exchange (the edge dedup);
-    the cap window's shuffle is gone."""
-    pages = synth_pages(spark, 50)
-    triples, _ = build_kg_fused(pages)
-    plan = triples._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "Window" not in plan, plan
-
-
-def test_fused_partition_invariance(spark):
-    a = build_kg_fused(synth_pages(spark, 200, partitions=1))[0]
-    b = build_kg_fused(synth_pages(spark, 200, partitions=11))[0]
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+def _gazetteer_outputs(pages, gaz=None):
+    return outputs_from_capped(capped_mentions(extract_docs(pages), gaz))
 
 
 def _udf_capped(docs):
     """Model-UDF extraction path: per-doc mention arrays from the
-    Arrow UDF, then the in-row cap — the 'same fusion applies after
-    the UDF' claim from kgp/plans/pipeline.py, exercised for real."""
-    arrays = mention_arrays_arrow(docs)
-    return arrays.select(
-        "url",
-        F.explode(cap_mention_array_col(F.col("mentions"))).alias("m"),
-    ).select(
-        "url",
-        F.col("m.surface").alias("surface"),
-        F.col("m.label").alias("label"),
-        F.col("m.first_offset").alias("first_offset"),
+    Arrow UDF, then the same in-row cap as the gazetteer path."""
+    return explode_mentions(
+        mention_arrays_arrow(docs),
+        cap_mention_array_col(F.col("mentions")),
     )
 
 
+def test_fused_equals_oracle(spark):
+    """Both extractors → the one cap → outputs ≡ the pure-Python oracle
+    (kgp.oracle: whole-token match, label filter, pinned order, cap)."""
+    pages = synth_pages(spark, 400).cache()
+    rows = pages.select("url", "text").collect()
+    want_t = {
+        t
+        for r in rows
+        for t in oracle.triples_for_page(r["url"], r["text"], PAGES_SURFACES)
+    }
+    # entity nodes: one per normalized id, min name/type
+    want_e = {}
+    for r in rows:
+        text = oracle.extracted_text_for_page(r["text"])
+        kept = [
+            m
+            for m in oracle.extract_mentions(text, PAGES_SURFACES)
+            if m[1] in ENTITY_LABELS
+        ]
+        for s, lab, _ in kept[:MAX_ENTITIES_PER_DOC]:
+            eid = oracle.normalize_entity_id(s)
+            n, t = want_e.get(eid, (s, lab))
+            want_e[eid] = (min(n, s), min(t, lab))
+    assert len(want_e) > 10
+    docs = extract_docs(pages)
+    for capped in (capped_mentions(docs), _udf_capped(docs)):
+        triples, entities = outputs_from_capped(capped)
+        assert {tuple(r) for r in triples.collect()} == want_t
+        got_e = {
+            r["entity_id"]: (r["name"], r["type"])
+            for r in entities.collect()
+        }
+        assert got_e == want_e
+    pages.unpersist()
+
+
+def test_fused_triples_single_shuffle(spark):
+    """pages→triples: exactly one hash exchange (the edge dedup); no
+    cap window, no extraction join."""
+    triples, _ = _gazetteer_outputs(synth_pages(spark, 50))
+    plan = triples._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Window" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_fused_partition_invariance(spark):
+    a = _gazetteer_outputs(synth_pages(spark, 200, partitions=1))[0]
+    b = _gazetteer_outputs(synth_pages(spark, 200, partitions=11))[0]
+    assert _rows(a) == _rows(b)
+
+
 def test_udf_cap_equals_relational_path(spark):
-    """Triple-set equality: Arrow-UDF mention arrays + in-row cap ≡
-    broadcast-gazetteer relational extraction + packed-agg cap, on the
-    synth corpus — including the downstream triples/entities."""
+    """Arrow-UDF mention arrays and the JVM gazetteer column (the pure
+    relational-expression extractor), through the one cap, give the
+    same capped mentions and the same triples/entities."""
     pages = synth_pages(spark, 400).cache()
     docs = extract_docs(pages)
-    ref_capped = cap_mentions(mentions_relational(docs, gazetteer_df(spark)))
+    ref_capped = capped_mentions(docs)
     udf_capped = _udf_capped(docs)
-    assert sorted(map(tuple, ref_capped.collect())) == \
-           sorted(map(tuple, udf_capped.collect()))
-    t_ref, e_ref = build_triples(ref_capped), build_entities(ref_capped)
+    assert _rows(ref_capped) == _rows(udf_capped)
+    t_ref, e_ref = outputs_from_capped(ref_capped)
     t_udf, e_udf = outputs_from_capped(udf_capped)
-    assert sorted(map(tuple, t_ref.collect())) == \
-           sorted(map(tuple, t_udf.collect()))
-    assert sorted(map(tuple, e_ref.collect())) == \
-           sorted(map(tuple, e_udf.collect()))
+    assert _rows(t_ref) == _rows(t_udf)
+    assert _rows(e_ref) == _rows(e_udf)
     pages.unpersist()
 
 
@@ -143,5 +158,6 @@ def test_fused_empty_gazetteer_yields_zero_mentions(spark):
     """Regression: an empty/all-filtered gazetteer must produce zero
     triples, not an analysis error (VOID array element type)."""
     pages = synth_pages(spark, 10)
-    t, e = build_kg_fused(pages, gaz=[("decoy", "EVENT")])
-    assert t.count() == 0 and e.count() == 0
+    for gaz in ([("decoy", "EVENT")], []):
+        t, e = _gazetteer_outputs(pages, gaz=gaz)
+        assert t.count() == 0 and e.count() == 0

@@ -4,16 +4,35 @@ from pyspark.sql import functions as F
 
 from kgp import oracle
 from kgp.gazetteer import PAGES_SURFACES
-from kgp.operators.ner import gazetteer_df, mentions_arrow, mentions_relational
+from kgp.operators.ner import gazetteer_mentions_col, mention_arrays_arrow
 from kgp.operators.segment import extract_docs
-from kgp.operators.triples import (
-    build_entities,
-    build_triples,
-    cap_mentions,
+from kgp.operators.triples import build_entities, build_triples
+from kgp.plans.pipeline import (
+    cap_mention_array_col,
+    capped_mentions,
+    explode_mentions,
 )
 from kgp.synth import synth_pages
 
 N = 400
+
+
+def _arrow_capped(docs):
+    return explode_mentions(
+        mention_arrays_arrow(docs), cap_mention_array_col(F.col("mentions"))
+    )
+
+
+# both extractors, through the one cap
+EXTRACTORS = (capped_mentions, _arrow_capped)
+
+
+def _gazetteer_mentions(docs):
+    """Uncapped, unfiltered gazetteer mentions (url, surface, label,
+    first_offset)."""
+    return explode_mentions(
+        docs, gazetteer_mentions_col(F.col("extracted_text"))
+    )
 
 
 def _oracle_triples(pages_rows):
@@ -24,21 +43,18 @@ def _oracle_triples(pages_rows):
     return want
 
 
-def _spark_triples(spark, mention_fn):
+def _spark_triples(spark, capped_fn=capped_mentions):
     pages = synth_pages(spark, N, partitions=9)
-    docs = extract_docs(pages)
-    mentions = mention_fn(spark, docs)
-    capped = cap_mentions(mentions)
+    capped = capped_fn(extract_docs(pages))
     return pages, build_triples(capped), capped
 
 
 def test_relational_mentions_match_oracle(spark):
+    """The JVM gazetteer column (a pure relational expression) finds
+    exactly the oracle's mentions, decoy labels included."""
     pages = synth_pages(spark, N)
     docs = extract_docs(pages)
-    got = {
-        (r["url"], r["surface"], r["label"], r["first_offset"])
-        for r in mentions_relational(docs, gazetteer_df(spark)).collect()
-    }
+    got = {tuple(r) for r in _gazetteer_mentions(docs).collect()}
     want = set()
     for r in pages.collect():
         text = oracle.extracted_text_for_page(r["text"])
@@ -51,41 +67,43 @@ def test_relational_mentions_match_oracle(spark):
 def test_arrow_mentions_equal_relational(spark):
     pages = synth_pages(spark, N)
     docs = extract_docs(pages)
-    rel = {
+    rel = {tuple(r) for r in _gazetteer_mentions(docs).collect()}
+    arw = {
         tuple(r)
-        for r in mentions_relational(docs, gazetteer_df(spark)).collect()
+        for r in explode_mentions(
+            mention_arrays_arrow(docs), F.col("mentions")
+        ).collect()
     }
-    arw = {tuple(r) for r in mentions_arrow(docs).collect()}
     assert rel == arw
 
 
 def test_triples_pr_is_one(spark):
-    pages, triples_df, _ = _spark_triples(
-        spark, lambda s, d: mentions_relational(d, gazetteer_df(s))
-    )
-    got = {(r["subj"], r["pred"], r["obj"]) for r in triples_df.collect()}
-    want = _oracle_triples(pages.collect())
-    tp = len(got & want)
-    precision = tp / len(got) if got else 1.0
-    recall = tp / len(want) if want else 1.0
-    assert precision == 1.0 and recall == 1.0, (precision, recall)
-    assert len(want) > 200
+    for capped_fn in EXTRACTORS:
+        pages, triples_df, _ = _spark_triples(spark, capped_fn)
+        got = {(r["subj"], r["pred"], r["obj"]) for r in triples_df.collect()}
+        want = _oracle_triples(pages.collect())
+        tp = len(got & want)
+        precision = tp / len(got) if got else 1.0
+        recall = tp / len(want) if want else 1.0
+        assert precision == 1.0 and recall == 1.0, (precision, recall)
+        assert len(want) > 200
 
 
 def test_cap_and_label_filter(spark):
-    _, triples_df, capped = _spark_triples(
-        spark, lambda s, d: mentions_relational(d, gazetteer_df(s))
-    )
-    per_doc = capped.groupBy("url").count().agg(F.max("count")).first()[0]
-    assert per_doc <= 10
-    labels = {r["label"] for r in capped.select("label").distinct().collect()}
-    assert labels <= {"PERSON", "ORG", "GPE", "PRODUCT"}
+    for capped_fn in EXTRACTORS:
+        _, _, capped = _spark_triples(spark, capped_fn)
+        per_doc = (
+            capped.groupBy("url").count().agg(F.max("count")).first()[0]
+        )
+        assert per_doc <= 10
+        labels = {
+            r["label"] for r in capped.select("label").distinct().collect()
+        }
+        assert labels <= {"PERSON", "ORG", "GPE", "PRODUCT"}
 
 
 def test_entities_unique_and_normalized(spark):
-    _, _, capped = _spark_triples(
-        spark, lambda s, d: mentions_relational(d, gazetteer_df(s))
-    )
+    _, _, capped = _spark_triples(spark)
     ents = build_entities(capped)
     assert ents.count() == ents.select("entity_id").distinct().count()
     bad = ents.filter(
@@ -95,9 +113,7 @@ def test_entities_unique_and_normalized(spark):
 
 
 def test_edge_ids_match_reference_format(spark):
-    _, triples_df, _ = _spark_triples(
-        spark, lambda s, d: mentions_relational(d, gazetteer_df(s))
-    )
+    _, triples_df, _ = _spark_triples(spark)
     r = triples_df.first()
     assert r["edge_id"] == f"edge:{r['subj']}:{r['obj']}:contains_entity"
 

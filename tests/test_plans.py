@@ -7,8 +7,8 @@ benchmark does.
 
 from pyspark.sql import functions as F
 
-from kgp.operators.ner import gazetteer_df, mentions_relational
 from kgp.operators.segment import extract_docs
+from kgp.plans.pipeline import capped_mentions
 from kgp.synth import synth_pages
 
 
@@ -39,12 +39,14 @@ def test_segmentation_is_shuffle_free(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_gazetteer_match_broadcasts_small_side(spark):
-    docs = extract_docs(synth_pages(spark, 20))
-    plan = _plan(mentions_relational(docs, gazetteer_df(spark)))
-    assert "Broadcast" in plan, plan
-    # the big (docs) side must not shuffle for the join
-    assert "Exchange hashpartitioning" not in plan, plan
+def test_capped_stage_is_narrow(spark, tmp_path):
+    """The `capped` stage (extraction + per-doc cap over committed
+    docs) is one narrow pass: no Exchange, no Window, no join."""
+    p = str(tmp_path / "docs")
+    extract_docs(synth_pages(spark, 20)).write.parquet(p)
+    plan = _plan(capped_mentions(spark.read.parquet(p)))
+    for op in ("Exchange", "Window", "Join"):
+        assert op not in plan, plan
 
 
 def test_dim_join_uses_broadcast_hash_join(spark):
@@ -104,15 +106,15 @@ def test_repetition_stats_is_shuffle_free(spark, tmp_path):
 
 
 def test_triples_build_has_no_extra_shuffles(spark):
-    """pages→triples: shuffles only where semantics require them (the
-    per-doc cap window + the edge dedup) — ≤ 2 hash exchanges."""
-    from kgp.operators.triples import build_triples, cap_mentions
+    """pages→triples: shuffles only where semantics require them — the
+    edge dedup, exactly one hash exchange (the per-doc cap is
+    in-row)."""
+    from kgp.operators.triples import build_triples
 
     docs = extract_docs(synth_pages(spark, 20))
-    m = mentions_relational(docs, gazetteer_df(spark))
-    plan = _plan(build_triples(cap_mentions(m)))
+    plan = _plan(build_triples(capped_mentions(docs)))
     n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges <= 2, f"{n_exchanges} shuffles:\n{plan}"
+    assert n_exchanges == 1, f"{n_exchanges} shuffles:\n{plan}"
 
 
 def test_training_filter_stage_is_shuffle_free(spark):

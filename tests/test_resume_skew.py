@@ -27,15 +27,15 @@ def test_kill_and_resume_identical_output(spark, pages_path, tmp_path):
     out_resumed = str(tmp_path / "resumed")
     out_fresh = str(tmp_path / "fresh")
 
-    # run 1: "crashes" after the mentions stage commit
+    # run 1: "crashes" after the capped stage commit
     r1 = build_kg_pipeline(spark, pages_path, out_resumed,
-                           stop_after="mentions")
-    assert r1.executed == ["docs", "mentions"]
+                           stop_after="capped")
+    assert r1.executed == ["docs", "capped"]
 
     # run 2: resumes — committed stages skipped, remainder executed
     r2 = build_kg_pipeline(spark, pages_path, out_resumed)
-    assert r2.skipped == ["docs", "mentions"]
-    assert r2.executed == ["capped", "triples", "entities"]
+    assert r2.skipped == ["docs", "capped"]
+    assert r2.executed == ["triples", "entities"]
 
     # uncrashed reference run
     build_kg_pipeline(spark, pages_path, out_fresh)
@@ -61,8 +61,8 @@ def test_lineage_counters_match_output(spark, pages_path, tmp_path):
     assert triple_rows == spark.read.parquet(f"{out}/triples").count()
     # every stage committed exactly once; per-partition rows present
     stages = {r["stage"] for r in committed.select("stage").collect()}
-    assert stages == {"docs", "mentions", "capped", "triples", "entities"}
-    assert L.run_stats(spark, out).count() >= 5
+    assert stages == {"docs", "capped", "triples", "entities"}
+    assert L.run_stats(spark, out).count() >= 4
 
 
 def test_half_written_stage_is_overwritten(spark, pages_path, tmp_path):
@@ -71,12 +71,12 @@ def test_half_written_stage_is_overwritten(spark, pages_path, tmp_path):
     out = str(tmp_path / "o")
     r1 = build_kg_pipeline(spark, pages_path, out, stop_after="docs")
     # simulate a crashed second stage: directory exists, no _SUCCESS
-    mpath = f"{out}/mentions"
+    mpath = f"{out}/capped"
     spark.read.parquet(f"{out}/docs").limit(3).write.parquet(mpath)
     import os
     os.remove(f"{mpath}/_SUCCESS")
     r2 = build_kg_pipeline(spark, pages_path, out)
-    assert "mentions" in r2.executed
+    assert "capped" in r2.executed
     assert spark.read.parquet(mpath).count() > 3
 
 
@@ -86,27 +86,30 @@ def test_half_written_stage_is_overwritten(spark, pages_path, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+def _jobs_in_group(spark, group, work):
+    """(work(), ids of the Spark jobs it launched) — the job-group
+    probe."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = work()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events arrive async
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return res, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_ledger_calls_launch_no_spark_job(spark, pages_path, tmp_path):
     """Footer counts, the append and the committed check — the ledger
     work of every stage — run no Spark job."""
     out = str(tmp_path / "o")
     build_kg_pipeline(spark, pages_path, out, stop_after="docs")
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-
-    def jobs_in_group(group, work):
-        sc.setJobGroup(group, group)
-        try:
-            res = work()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        bus.waitUntilEmpty(30_000)  # job-start events arrive async
-        return res, list(sc.statusTracker().getJobIdsForGroup(group))
 
     # control: the probe does see a job launched inside its group
-    _, control = jobs_in_group("ledger-control",
-                               lambda: spark.range(3).count())
+    _, control = _jobs_in_group(spark, "ledger-control",
+                                lambda: spark.range(3).count())
     assert control
 
     def ledger_work():
@@ -116,14 +119,52 @@ def test_ledger_calls_launch_no_spark_job(spark, pages_path, tmp_path):
         return (counts, L.stage_committed(spark, out, "docs"),
                 L.stage_committed(spark, out, "mentions"))
 
-    (counts, docs_ok, mentions_ok), jobs = jobs_in_group(
-        "ledger-work", ledger_work
+    (counts, docs_ok, mentions_ok), jobs = _jobs_in_group(
+        spark, "ledger-work", ledger_work
     )
     assert jobs == []
     assert docs_ok and not mentions_ok
     assert sum(c for _, c in counts) == spark.read.parquet(
         f"{out}/docs"
     ).count()
+
+
+def test_footer_counts_on_uri_out_dir_launch_no_spark_job(
+    spark, pages_path, tmp_path, monkeypatch
+):
+    """A pipeline run into a file:// out_dir counts every stage from
+    its parquet footers — no Spark job inside per_partition_counts —
+    and the counts equal the data-scan fallback's."""
+    out = f"file://{tmp_path}/o"
+    real = L.per_partition_counts
+    calls = []
+
+    def probed(spark_, path):
+        counts, jobs = _jobs_in_group(
+            spark_, f"counts-{len(calls)}", lambda: real(spark_, path)
+        )
+        calls.append((path, counts, jobs))
+        return counts
+
+    monkeypatch.setattr(L, "per_partition_counts", probed)
+    build_kg_pipeline(spark, pages_path, out)
+    monkeypatch.undo()
+    assert [p.rsplit("/", 1)[1] for p, _, _ in calls] == [
+        "docs", "capped", "triples", "entities"
+    ]
+    for path, counts, jobs in calls:
+        assert jobs == [], path
+        assert counts == L._scan_counts(spark, path), path
+
+
+def test_lineage_fixture_reads_back_as_lineage_schema(spark):
+    """The pinned oracle ledger has the same column types as a real
+    ledger (UTC `timestamp`, not `timestamp_ntz`)."""
+    lin = L.read_lineage(spark, L.ensure_lineage_fixture_local())
+    expected = spark.createDataFrame([], L.LINEAGE_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in expected
+    ]
 
 
 def test_stage_committed_on_fresh_out_dir(spark, tmp_path):
@@ -160,13 +201,23 @@ def test_ledger_reads_back_as_lineage_schema(spark, tmp_path):
 def test_spark_written_ledger_still_resumes(spark, pages_path, tmp_path):
     """An out_dir whose committed rows were written by Spark's parquet
     writer (INT96 timestamps, .crc sidecars, _SUCCESS) resumes, and the
-    aggregating reads see the mixed ledger."""
+    aggregating reads see the mixed ledger. The out_dir has the older
+    five-stage layout — `docs` and `mentions` committed, `capped`
+    missing — so the resume rebuilds `capped` from `docs`, ignores
+    `mentions/`, and ends with a clean run's outputs."""
     from datetime import datetime, timezone
 
     import pyarrow.parquet as pq
 
+    from kgp.operators.ner import gazetteer_mentions_col
+    from kgp.plans.pipeline import explode_mentions
+
     out = str(tmp_path / "o")
-    build_kg_pipeline(spark, pages_path, out, stop_after="mentions")
+    build_kg_pipeline(spark, pages_path, out, stop_after="docs")
+    docs = spark.read.parquet(f"{out}/docs")
+    explode_mentions(
+        docs, gazetteer_mentions_col(F.col("extracted_text"))
+    ).write.parquet(f"{out}/mentions")
     ledger = L.lineage_dir(out)
     shutil.rmtree(ledger)
     t = datetime.now(timezone.utc)
@@ -182,7 +233,7 @@ def test_spark_written_ledger_still_resumes(spark, pages_path, tmp_path):
     ).physical_type == "INT96"
 
     r = build_kg_pipeline(spark, pages_path, out)
-    assert r.skipped == ["docs", "mentions"]
+    assert r.skipped == ["docs"]
     assert r.executed == ["capped", "triples", "entities"]
     stats = {
         (x["stage"], x["status"]): x["n_partitions"]
@@ -190,8 +241,16 @@ def test_spark_written_ledger_still_resumes(spark, pages_path, tmp_path):
     }
     assert stats[("docs", L.STATUS_COMMITTED)] == 1
     assert stats[("docs", L.STATUS_SKIPPED)] == 1
-    assert stats[("mentions", L.STATUS_SKIPPED)] == 1
+    assert stats[("mentions", L.STATUS_COMMITTED)] == 1
     assert ("entities", L.STATUS_COMMITTED) in stats
+    clean = str(tmp_path / "clean")
+    build_kg_pipeline(spark, pages_path, clean)
+    for table in ["triples", "entities"]:
+        a = sorted(map(tuple, spark.read.parquet(f"{out}/{table}").collect()))
+        b = sorted(
+            map(tuple, spark.read.parquet(f"{clean}/{table}").collect())
+        )
+        assert a == b, table
 
 
 def test_hidden_temp_from_crashed_append_is_ignored(
@@ -203,39 +262,39 @@ def test_hidden_temp_from_crashed_append_is_ignored(
 
     out = str(tmp_path / "o")
     build_kg_pipeline(spark, pages_path, out, stop_after="docs")
-    spark.read.parquet(f"{out}/docs").write.parquet(f"{out}/mentions")
+    spark.read.parquet(f"{out}/docs").write.parquet(f"{out}/capped")
 
     def killed(*a, **kw):
         raise RuntimeError("killed before the rename")
 
     monkeypatch.setattr(fsutil, "rename", killed)
     with pytest.raises(RuntimeError):
-        L.append_lineage(spark, out, "r-crash", "mentions",
+        L.append_lineage(spark, out, "r-crash", "capped",
                          L.STATUS_COMMITTED, L.now_s(), counts=[(0, 3)])
     monkeypatch.undo()
     assert any(
         n.startswith(".part-") and n.endswith(".tmp")
         for n in os.listdir(L.lineage_dir(out))
     )
-    assert os.path.exists(f"{out}/mentions/_SUCCESS")
-    assert not L.stage_committed(spark, out, "mentions")
+    assert os.path.exists(f"{out}/capped/_SUCCESS")
+    assert not L.stage_committed(spark, out, "capped")
     assert L.read_lineage(spark, out).filter(
-        F.col("stage") == "mentions"
+        F.col("stage") == "capped"
     ).count() == 0
     r = build_kg_pipeline(spark, pages_path, out)
     assert r.skipped == ["docs"]
-    assert "mentions" in r.executed
+    assert "capped" in r.executed
 
 
 def test_salted_count_distinct_equals_plain(spark, pages_path):
-    from kgp.operators.ner import gazetteer_df, mentions_relational
     from kgp.operators.segment import extract_docs
-    from kgp.operators.triples import cap_mentions, normalize_entity_id
+    from kgp.operators.triples import normalize_entity_id
+    from kgp.plans.pipeline import capped_mentions
 
     pages = spark.read.parquet(pages_path)
-    capped = cap_mentions(
-        mentions_relational(extract_docs(pages), gazetteer_df(spark))
-    ).select(normalize_entity_id(F.col("surface")).alias("e"), "url")
+    capped = capped_mentions(extract_docs(pages)).select(
+        normalize_entity_id(F.col("surface")).alias("e"), "url"
+    )
     plain = {
         r["e"]: r["n"]
         for r in capped.groupBy("e")
