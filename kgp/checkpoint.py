@@ -69,7 +69,14 @@ class StageRunner:
     ) -> DataFrame:
         """Run (or skip) one stage; returns a reader of its output.
         ``partition_by`` hive-partitions the stage output (the lineage
-        footer counters read one directory level down already)."""
+        footer counters read one directory level down already).
+
+        An executed stage's reader takes the schema of the DataFrame
+        it just wrote, so reading it back launches no schema-inference
+        job; hive partition columns still come last, as inferred. A
+        skipped stage was written by an earlier run, so its reader
+        infers the schema from the committed files
+        (``spark.read.parquet``)."""
         path = self.stage_path(name)
         t0 = L.now_s()
         if L.stage_committed(self.spark, self.out_dir, name):
@@ -80,7 +87,8 @@ class StageRunner:
             )
             return self.spark.read.parquet(path)
         try:
-            w = build().write.mode("overwrite")
+            out = build()
+            w = out.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
@@ -96,7 +104,7 @@ class StageRunner:
             L.STATUS_COMMITTED, t0, counts=counts,
         )
         self.executed.append(name)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(out.schema).parquet(path)
 
 
 def build_kg_pipeline(

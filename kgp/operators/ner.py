@@ -13,18 +13,32 @@ surface's first whole-space-token occurrence in the document text.
 Keeping the list in-row is what lets the one cap
 (kgp.plans.pipeline.cap_mention_array_col: label filter, pinned
 first-occurrence order, cap 10 — gremlin_client.py:115) run with no
-Window and no shuffle, whichever extractor produced the list:
+Window and no shuffle, whichever extractor produced the list.
 
-* ``gazetteer_mentions_col`` — a JVM column: each gazetteer surface
-  unrolls into the projection as ``locate`` on the space-padded text.
+Both gazetteer extractors find candidates in ONE token pass instead
+of one full-text scan per surface: the gazetteer is grouped by first
+word (``_first_word_groups``), each document's space-split tokens are
+probed against that set once, and only the surfaces whose first word
+occurs are searched for (a hash probe per token, not a scan per
+dictionary entry). This is exact: a surface ``s`` matches iff
+``' '+s+' '`` occurs in ``' '+text+' '``, and any such occurrence puts
+the first word of ``s`` — which holds no space — between two spaces or
+pad boundaries, i.e. makes it one whole element of
+``text.split(' ')``. So a surface whose first word is not a token can
+never match, and the candidates' substring check is the per-surface
+check itself.
+
+* ``gazetteer_mentions_col`` — a JVM column: ``array_intersect`` of
+  the split text with the first words, a constant map from first word
+  to its surfaces, ``instr`` per candidate on the space-padded text.
   100 % codegen, no join, no Python. This is the scale path AND the
   semantics shared with the DuckDB oracle (strpos on the same padding).
 
 * ``mention_arrays_arrow`` — the model seam: an Arrow-batched
-  ``mapInPandas`` returning the same array column (vectorized pandas
-  ``str.find`` per surface across the whole batch — no per-row Python
-  loop over texts). ``SpacyMentionExtractor`` plugs in here when the
-  model is importable.
+  ``mapInPandas`` returning the same array column, in gazetteer order
+  (the same first-word prefilter, then ``str.find`` per candidate).
+  ``SpacyMentionExtractor`` plugs in here when the model is
+  importable.
 """
 
 from __future__ import annotations
@@ -42,37 +56,91 @@ MENTION_ARRAY_TYPE = (
 )
 
 
+def _first_word_groups(gaz: list[tuple[str, str]]) -> dict[str, list[int]]:
+    """First word (``surface.split(' ')[0]``) → indices of the
+    gazetteer entries starting with it, in gazetteer order."""
+    groups: dict[str, list[int]] = {}
+    for i, (s, _) in enumerate(gaz):
+        groups.setdefault(s.split(" ")[0], []).append(i)
+    return groups
+
+
 def gazetteer_mentions_col(
     text: Column, gaz: list[tuple[str, str]] | None = None
 ) -> Column:
     """MENTION_ARRAY_TYPE of the ``gaz`` surfaces found in ``text``, in
-    gazetteer order (the cap orders them).
+    no particular order (the cap orders them).
 
-    locate() is 1-based over the padded text ``' '||text||' '``; the
-    0-based offset into the unpadded text is ``locate - 1`` (one for
-    1-based; the added leading pad space is consumed by the
-    ``' '+surface`` prefix). NULL text matches nothing.
+    A surface ``s`` matches iff ``' '+s+' '`` occurs in the padded
+    text ``' '||text||' '``; ``first_offset`` is that occurrence's
+    0-based index into the padded text, which is the surface's index
+    in ``text`` (the added leading pad space is consumed by the
+    ``' '+s`` prefix). ``instr`` is 1-based, hence ``instr - 1``.
+
+    One token pass, then one ``instr`` per candidate:
+
+    1. the gazetteer is grouped at plan build by first word
+       (``s.split(' ')[0]``) into one constant map
+       first word → ``array<struct<surface, label, pat>>``;
+    2. per row, ``array_intersect(split(text, ' ', -1), first words)``
+       probes a hash set once per token — the distinct first words
+       present in the text;
+    3. the hits' surface groups are flattened, and only those
+       candidates are ``instr``-searched; a candidate not found
+       (``first_offset < 0``) is dropped.
+
+    Exact: if ``' '+s+' '`` occurs in ``' '+text+' '``, the first word
+    ``w`` of ``s`` holds no space and is delimited on both sides by a
+    space or a pad boundary there, so ``w`` is one whole element of
+    ``split(text, ' ', -1)`` — also when ``w`` is empty (a surface
+    with a leading space matches only across an empty token). So every
+    matching surface is a candidate, and the ``instr`` check decides
+    exactly as a scan per surface would. ``array_intersect`` yields
+    each first word once, so a duplicate gazetteer entry yields one
+    mention per entry. NULL text matches nothing.
     """
     gaz = PAGES_SURFACES if gaz is None else gaz
+    # F.array() with zero elements has VOID element type and fails
+    # analysis inside the cap's lambdas — return a typed empty
+    empty = F.array().cast(MENTION_ARRAY_TYPE)
     if not gaz:
-        # F.array() with zero elements has VOID element type and fails
-        # analysis inside the cap's lambdas — return a typed empty
-        return F.array().cast(MENTION_ARRAY_TYPE)
+        return empty
+    groups = _first_word_groups(gaz)
+    candidates = F.create_map(
+        *[
+            c
+            for w, idx in groups.items()
+            for c in (
+                F.lit(w),
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(gaz[i][0]).alias("surface"),
+                            F.lit(gaz[i][1]).alias("label"),
+                            F.lit(f" {gaz[i][0]} ").alias("pat"),
+                        )
+                        for i in idx
+                    ]
+                ),
+            )
+        ]
+    )
+    hits = F.array_intersect(
+        F.split(text, " ", -1), F.array(*[F.lit(w) for w in groups])
+    )
     padded = F.concat(F.lit(" "), text, F.lit(" "))
-    return F.filter(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("surface"),
-                    F.lit(lab).alias("label"),
-                    (F.locate(f" {s} ", padded) - 1)
-                    .cast("long")
-                    .alias("first_offset"),
-                )
-                for s, lab in gaz
-            ]
+    found = F.transform(
+        F.flatten(F.transform(hits, lambda w: F.element_at(candidates, w))),
+        lambda c: F.struct(
+            c["surface"].alias("surface"),
+            c["label"].alias("label"),
+            (F.instr(padded, c["pat"]) - 1)
+            .cast("long")
+            .alias("first_offset"),
         ),
-        lambda m: m["first_offset"] >= 0,
+    )
+    return F.coalesce(
+        F.filter(found, lambda m: m["first_offset"] >= 0), empty
     )
 
 
@@ -87,33 +155,44 @@ def mention_arrays_arrow(
     returns the per-document mention list; here it lands as an Arrow
     struct array).
 
-    Same matches as gazetteer_mentions_col, computed by a vectorized
-    str.find batch loop; a real model (SpacyMentionExtractor.
-    extract_batch) slots in by replacing the inner loop, returning the
-    same list-of-(surface, label, offset) per document.
+    Same matches as gazetteer_mentions_col, in gazetteer order: the
+    same first-word prefilter (one ``split`` and one set intersection
+    per text), then ``str.find`` for the candidates only. A real model
+    (SpacyMentionExtractor.extract_batch) slots in by replacing the
+    inner loop, returning the same list-of-(surface, label, offset)
+    per document.
     """
     gaz = PAGES_SURFACES if gaz is None else gaz
     id_type = docs.schema[id_col].dataType.simpleString()
+    groups = _first_word_groups(gaz)
+
+    def mentions(text: str) -> list[dict]:
+        padded = " " + text + " "
+        out = []
+        for i in sorted(
+            i for w in groups.keys() & text.split(" ") for i in groups[w]
+        ):
+            surface, label = gaz[i]
+            p = padded.find(" " + surface + " ")
+            if p >= 0:
+                out.append(
+                    {"surface": surface, "label": label, "first_offset": p}
+                )
+        return out
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # NULL text ⇒ no match (parity with locate() on NULL);
-            # without fillna the nullable-string dtype propagates pd.NA
-            # through `pos >= 0`
-            padded = " " + pdf[text_col].astype("string").fillna("") + " "
-            per_doc: list[list[dict]] = [[] for _ in range(len(pdf))]
-            for surface, label in gaz:
-                pos = padded.str.find(" " + surface + " ")
-                for i, p in enumerate(pos.to_numpy()):
-                    if p >= 0:
-                        per_doc[i].append(
-                            {
-                                "surface": surface,
-                                "label": label,
-                                "first_offset": int(p),
-                            }
-                        )
-            yield pd.DataFrame({id_col: pdf[id_col], "mentions": per_doc})
+            # NULL text ⇒ no match, not even of an empty surface
+            # (parity with the JVM column)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    "mentions": [
+                        [] if pd.isna(t) else mentions(t)
+                        for t in pdf[text_col]
+                    ],
+                }
+            )
 
     return docs.select(id_col, text_col).mapInPandas(
         extract, schema=f"`{id_col}` {id_type}, mentions {MENTION_ARRAY_TYPE}"

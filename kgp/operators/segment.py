@@ -18,7 +18,10 @@ Two implementations:
   at the triggering entry's start = 30·(k+1); final ends at
   last.start+duration = 0.5·n_tokens) are reproduced exactly.
   Byte-identity vs kgp.oracle (which runs the sequential algorithm) is
-  asserted in tests/test_segment.py.
+  asserted in tests/test_segment.py. The `docs` table
+  (``extract_docs``) needs only the joined text, which is always
+  ``' ' || text``, and the window count, so it is a direct projection
+  that builds no segments.
 
 * ``segment_timed_entries`` — the general operator for arbitrary timed
   transcript entries (variable durations, gaps > window). Grouped
@@ -106,12 +109,30 @@ def segment_pages(pages: DataFrame) -> DataFrame:
 
 
 def extract_docs(pages: DataFrame) -> DataFrame:
-    """`docs` table with the judged byte-identical extracted_text."""
-    return with_segments(pages).select(
+    """`docs` table with the judged byte-identical extracted_text.
+
+    A direct projection — no segments are built. Joining the segment
+    texts of ``with_segments`` with ``' '`` re-forms the token stream:
+    each 60-token slice is its tokens joined by ``' '``, consecutive
+    slices are joined by ``' '``, and segment 0 carries the one leading
+    space, so ``extracted_text`` is always ``' ' || text`` (``''`` for
+    NULL text, as ``concat_ws`` over a NULL segment array gives).
+    ``n_segments`` is the number of 60-token windows,
+    ``ceil(size(split(text, ' ', -1)) / 60)`` (NULL for NULL text).
+    Building each segment string only to concatenate them again costs
+    a slice, a join and a copy per window per row; the `segments`
+    table (``segment_pages``) still builds them.
+    """
+    text = F.col("text")
+    return pages.select(
         "url",
         F.concat(F.lit("page:"), F.col("url")).alias("doc_id"),
-        F.col("extracted_text"),
-        F.size("segs").cast("int").alias("n_segments"),
+        F.coalesce(F.concat(F.lit(" "), text), F.lit("")).alias(
+            "extracted_text"
+        ),
+        F.ceil(F.size(F.split(text, " ", -1)) / F.lit(_TOKENS_PER_WINDOW))
+        .cast("int")
+        .alias("n_segments"),
     )
 
 

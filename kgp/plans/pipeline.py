@@ -90,8 +90,8 @@ def capped_mentions(
     of ``docs`` from the JVM gazetteer extractor: one narrow pass.
 
     The label filter also folds into the gazetteer at plan build
-    (decoy surfaces are never located); the cap's own filter keeps it
-    exact for any array. Callers consuming triples AND entities should
+    (decoy surfaces are never candidates); the cap's own filter keeps
+    it exact for any array. Callers consuming triples AND entities should
     materialize this once (a stage boundary, as kgp.checkpoint does,
     or a persist) so the scan + extraction doesn't run per output.
     """

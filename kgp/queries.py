@@ -181,9 +181,11 @@ _LABELS_SQL = ", ".join(f"'{x}'" for x in ENTITY_LABELS)
 _GAZ_SQL = sql_values(DOCS_GAZETTEER)
 
 # mentions CTE shared by several oracles: whole-token gazetteer match
-# with 0-based first offset (strpos is 1-based; locate likewise on the
-# Spark side — kgp.operators.ner.gazetteer_mentions_col), capped by a
-# row_number window here and by the in-row
+# with 0-based first offset, one strpos per (document, surface) here
+# (1-based, hence - 1). The Spark side
+# (kgp.operators.ner.gazetteer_mentions_col) runs one instr (also
+# 1-based) per first-word candidate on the same padding — the same
+# matches. Capped by a row_number window here and by the in-row
 # kgp.plans.pipeline.cap_mention_array_col on the Spark side.
 _MENTIONS_CTE = f"""
 WITH mentions AS (

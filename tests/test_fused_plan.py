@@ -161,3 +161,22 @@ def test_fused_empty_gazetteer_yields_zero_mentions(spark):
     for gaz in ([("decoy", "EVENT")], []):
         t, e = _gazetteer_outputs(pages, gaz=gaz)
         assert t.count() == 0 and e.count() == 0
+
+
+def test_capped_plan_searches_once_per_candidate_not_per_surface(spark):
+    """Plan guard: the gazetteer extractor holds ONE substring search
+    (inside the candidate lambda), whatever the gazetteer size — not
+    one ``locate``/``instr`` per surface."""
+    docs = extract_docs(synth_pages(spark, 10))
+
+    def searches(gaz):
+        plan = (
+            capped_mentions(docs, gaz)
+            ._jdf.queryExecution().optimizedPlan().toString()
+        )
+        return plan.count("locate(") + plan.count("instr(")
+
+    small = [(f"w{i} x", "ORG") for i in range(4)]
+    large = [(f"w{i} x", "ORG") for i in range(40)]
+    assert searches(small) == searches(large) <= 1
+    assert searches(small) == 1

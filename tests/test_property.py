@@ -115,3 +115,71 @@ def test_asof_matches_python(spark, rows):
                  if rk == k and rts <= ts]
         want = max(cands)[1] if cands else None
         assert got[eid] == want, (eid, k, ts)
+
+
+# gazetteer-extractor inputs: a tiny vocabulary (with punctuation) so
+# surfaces hit often; empty words make leading/trailing/double spaces
+_gaz_word = st.text(alphabet="ab.,", min_size=0, max_size=3)
+_gaz_text = st.lists(_gaz_word, min_size=1, max_size=40).map(" ".join)
+_surface = st.lists(_gaz_word, min_size=1, max_size=3).map(" ".join)
+_label = st.sampled_from(["PERSON", "ORG", "GPE", "PRODUCT", "EVENT"])
+# fixed adversarial core: shared first word, one surface a prefix of
+# another, a duplicate surface with another label, an exact duplicate,
+# surfaces with a leading / trailing space
+_GAZ_CORE = [
+    ("a", "ORG"), ("a b", "PERSON"), ("a b.", "GPE"), ("a", "PERSON"),
+    ("a", "ORG"), (" a", "PRODUCT"), ("b ", "ORG"), ("ab", "GPE"),
+]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    st.lists(_gaz_text, min_size=1, max_size=40),
+    st.lists(st.tuples(_surface, _label), max_size=12),
+)
+def test_gazetteer_extractors_match_oracle(spark, texts, extra):
+    """The JVM gazetteer column and the Arrow extractor equal
+    kgp.oracle.extract_mentions (one substring check per surface) on
+    whitespace- and punctuation-laced texts and adversarial
+    gazetteers — uncapped as a multiset, and through the one cap in
+    its pinned (first_offset, surface, label) order."""
+    from kgp.constants import ENTITY_LABELS, MAX_ENTITIES_PER_DOC
+    from kgp.operators.ner import gazetteer_mentions_col, mention_arrays_arrow
+    from kgp.oracle import extract_mentions
+    from kgp.plans.pipeline import cap_mention_array_col
+
+    gaz = _GAZ_CORE + extra
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "id int, text string"
+    )
+    jvm = gazetteer_mentions_col(F.col("text"), gaz)
+    got = {
+        r["id"]: (r["m"], r["c"])
+        for r in df.select(
+            "id",
+            jvm.alias("m"),
+            cap_mention_array_col(jvm).alias("c"),
+        ).collect()
+    }
+    arrow = {
+        r["id"]: r["mentions"]
+        for r in mention_arrays_arrow(df, gaz, id_col="id", text_col="text")
+        .collect()
+    }
+
+    def triples(ms):
+        return [(m["surface"], m["label"], m["first_offset"]) for m in ms]
+
+    for i, text in enumerate(texts):
+        want = extract_mentions(text, gaz)
+        m, c = got[i]
+        assert sorted(triples(m)) == sorted(want), (text, gaz)
+        assert sorted(triples(arrow[i])) == sorted(want), (text, gaz)
+        capped = sorted(
+            (o, s, lab) for s, lab, o in want if lab in ENTITY_LABELS
+        )[:MAX_ENTITIES_PER_DOC]
+        assert triples(c) == [(s, lab, o) for o, s, lab in capped], text

@@ -157,6 +157,52 @@ def test_footer_counts_on_uri_out_dir_launch_no_spark_job(
         assert counts == L._scan_counts(spark, path), path
 
 
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_executed_stage_reader_needs_no_schema_job(
+    spark, pages_path, tmp_path, partitioned
+):
+    """An executed stage launches the jobs of its write and no more:
+    its reader takes the written DataFrame's schema instead of
+    inferring it with a job. The schema equals the inferred one, also
+    for a hive-partitioned stage whose partition column is not last in
+    the written DataFrame (the training pipeline's `split`)."""
+    from kgp.checkpoint import StageRunner
+    from kgp.operators.sampling import hash_split
+    from kgp.operators.segment import extract_docs
+
+    pages = spark.read.parquet(pages_path)
+    if partitioned:
+        name, partition_by = "split", ["split"]
+
+        def build():
+            out = hash_split(extract_docs(pages))
+            return out.select("split", *out.columns[:-1])
+    else:
+        name, partition_by = "docs", None
+
+        def build():
+            return extract_docs(pages)
+
+    def write_only():
+        w = build().write
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(str(tmp_path / "plain"))
+
+    _, write_jobs = _jobs_in_group(spark, f"write-{name}", write_only)
+    runner = StageRunner(spark, str(tmp_path / "o"))
+    reader, stage_jobs = _jobs_in_group(
+        spark, f"stage-{name}", lambda: runner.stage(name, build, partition_by)
+    )
+    assert runner.executed == [name]
+    assert len(stage_jobs) == len(write_jobs) >= 1
+    inferred = spark.read.parquet(runner.stage_path(name))
+    assert reader.schema == inferred.schema
+    assert sorted(map(tuple, reader.collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
+
+
 def test_lineage_fixture_reads_back_as_lineage_schema(spark):
     """The pinned oracle ledger has the same column types as a real
     ledger (UTC `timestamp`, not `timestamp_ntz`)."""

@@ -85,3 +85,33 @@ def test_determinism_across_partitionings(spark):
 def test_no_shuffle_in_segment_plan(spark):
     plan = with_segments(synth_pages(spark, 10))._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+def test_extract_docs_edge_cases_equal_segment_join(spark):
+    """extract_docs is a direct projection; on NULL, empty, blank,
+    double-space and 60/61/120-token texts it equals what joining the
+    built segments gives (``with_segments``): NULL text →
+    extracted_text '' and n_segments NULL."""
+    from pyspark.sql import functions as F
+
+    texts = [
+        None, "", " ", "a  b",
+        " ".join(["w"] * 60), " ".join(["w"] * 61), " ".join(["w"] * 120),
+    ]
+    pages = spark.createDataFrame(
+        [(f"u{i}", t) for i, t in enumerate(texts)], "url string, text string"
+    )
+    want = {
+        r["url"]: (r["extracted_text"], r["n_segments"])
+        for r in with_segments(pages)
+        .select("url", "extracted_text",
+                F.size("segs").cast("int").alias("n_segments"))
+        .collect()
+    }
+    got = {
+        r["url"]: (r["extracted_text"], r["n_segments"])
+        for r in extract_docs(pages).collect()
+    }
+    assert got == want
+    assert got["u0"] == ("", None)
+    assert [got[f"u{i}"][1] for i in range(1, 7)] == [1, 1, 1, 1, 2, 2]
