@@ -107,6 +107,20 @@ class StageRunner:
         return self.spark.read.schema(out.schema).parquet(path)
 
 
+def _docs(
+    spark: SparkSession, pages_path: str, repartition: int | None
+) -> DataFrame:
+    """The `docs` stage both pipelines start with: read the pages,
+    hash-repartition them by url when asked, extract the docs."""
+    from kgp.operators.segment import extract_docs
+    from kgp.skew import repartition_by_url_hash
+
+    pages = spark.read.parquet(pages_path)
+    if repartition:
+        pages = repartition_by_url_hash(pages, repartition)
+    return extract_docs(pages)
+
+
 def build_kg_pipeline(
     spark: SparkSession,
     pages_path: str,
@@ -131,20 +145,14 @@ def build_kg_pipeline(
     directory is simply never read, and `capped` rebuilds from `docs`
     unless it was already committed.
     """
-    from kgp.operators.segment import extract_docs
     from kgp.operators.triples import build_entities, build_triples
     from kgp.plans.pipeline import capped_mentions
-    from kgp.skew import repartition_by_url_hash
 
     runner = StageRunner(spark, out_dir, run_id)
 
-    def _docs() -> DataFrame:
-        pages = spark.read.parquet(pages_path)
-        if repartition:
-            pages = repartition_by_url_hash(pages, repartition)
-        return extract_docs(pages)
-
-    docs = runner.stage("docs", _docs)
+    docs = runner.stage(
+        "docs", lambda: _docs(spark, pages_path, repartition)
+    )
     if stop_after == "docs":
         return runner
 
@@ -234,23 +242,17 @@ def build_training_pipeline(
 
     from kgp.operators.dedup import near_dup_pairs_minhash
     from kgp.operators.sampling import hash_split
-    from kgp.operators.segment import extract_docs
     from kgp.operators.textstats import (
         dup_ratio_e4_sql,
         lang_best_col,
         quality_e4_sql,
     )
-    from kgp.skew import repartition_by_url_hash
 
     runner = StageRunner(spark, out_dir, run_id)
 
-    def _docs() -> DataFrame:
-        pages = spark.read.parquet(pages_path)
-        if repartition:
-            pages = repartition_by_url_hash(pages, repartition)
-        return extract_docs(pages)
-
-    docs = runner.stage("docs", _docs)
+    docs = runner.stage(
+        "docs", lambda: _docs(spark, pages_path, repartition)
+    )
     if stop_after == "docs":
         return runner
 

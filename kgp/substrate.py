@@ -13,9 +13,9 @@ local[N]-vs-local[4N] efficiency reading; a real cluster's 4N
 executors add whole sockets, memory buses, and disks instead, so
 readings here are the pessimistic bound.
 
-Shared by BENCH/scaling_ops.py (the per-op N→4N harness normalizes
-its efficiencies by the ceiling) and bench.py (each snapshot carries
-the control so a slow-host-window reading is self-diagnosing — the
+Shared by BENCH/scaling.py (the N→4N harness normalizes its
+efficiency by the ceiling) and bench.py (each snapshot carries the
+control so a slow-host-window reading is self-diagnosing — the
 round-4 driver snapshot read 1.34× slower than an idle-box re-run of
 identical code).
 """

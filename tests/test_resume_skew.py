@@ -439,6 +439,67 @@ def test_minhash_hot_band_bucket_cap(spark):
     )  # every hot-bucket pair is gone — the join never saw the bucket
 
 
+def test_minhash_pair_volume_on_template_pages(spark):
+    """Σ C(B,2) over the (band_idx, band_key) buckets — one aggregation
+    over the bands table, no join — is the exact pre-distinct candidate
+    volume. On the prep_dedup benchmark input (perfbench.inputs: 1 %
+    template pages, near-duplicates of each other) banding puts most
+    template pages into ONE bucket per band: the hot bucket that makes
+    that workload a skew workload. max_bucket below its size cuts
+    pairs."""
+    from kgp.operators.linking import (
+        lsh_bands,
+        lsh_candidate_pairs,
+        minhash_signature,
+        shingles_col,
+    )
+    from perfbench.inputs import pages_frame, template_hit
+
+    pdf = pages_frame(3000, 7, shared=True)
+    template = [u for u in pdf["url"] if template_hit(u)]
+    docs = spark.createDataFrame(
+        pdf[["url", "text"]].rename(columns={"url": "doc_id"})
+    )
+    sig = minhash_signature(
+        docs.select("doc_id", shingles_col(F.col("text")).alias("s")),
+        "doc_id", "s", family="fast",
+    )
+    bands = lsh_bands(sig, "doc_id", render="dec").persist()
+    try:
+        all_pairs = (
+            bands.groupBy("band_idx", "band_key")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.sum(F.expr("n * (n - 1) div 2")))
+            .first()[0]
+        )
+        a = bands.select(F.col("doc_id").alias("id_a"), "band_idx", "band_key")
+        b = bands.select(F.col("doc_id").alias("id_b"), "band_idx", "band_key")
+        joined = (
+            a.join(b, ["band_idx", "band_key"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .count()
+        )
+        assert all_pairs == joined
+        distinct = lsh_candidate_pairs(bands, "doc_id").count()
+        assert all_pairs >= distinct
+
+        hot = (
+            bands.filter(F.col("doc_id").isin(template))
+            .groupBy("band_idx", "band_key").count()
+            .groupBy("band_idx").agg(F.max("count").alias("hot"))
+            .collect()
+        )
+        n_bands = bands.select("band_idx").distinct().count()
+        assert len(hot) == n_bands
+        assert all(2 * r["hot"] >= len(template) for r in hot)
+
+        cap = min(r["hot"] for r in hot) - 1
+        capped = lsh_candidate_pairs(bands, "doc_id", max_bucket=cap).count()
+        assert capped < distinct
+    finally:
+        bands.unpersist()
+
+
 def test_triangle_degree_orientation_parity_and_hub_bound(spark):
     """orient='degree' returns IDENTICAL counts to the oracle-gated
     id-orientation, while bounding the wedge work at a hub: on a

@@ -3,7 +3,6 @@ Spark-Connect-safe file-size probe, \\x0B whitespace-class parity,
 triangle materialize-flag threading, substrate control smoke."""
 
 import hashlib
-import os
 import random
 
 import pytest
@@ -292,16 +291,3 @@ def test_substrate_control_smoke():
     assert 0 < out["ceiling"] <= 1.0
     assert len(out["repeats"]) == 1
 
-
-def test_scaling_ops_imports_shared_substrate():
-    """BENCH/scaling_ops.py must not re-grow a private single-run
-    control; it imports the shared median-of-N one."""
-    src = open(
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "BENCH",
-            "scaling_ops.py",
-        )
-    ).read()
-    assert "from kgp.substrate import substrate_control" in src
-    assert "substrate_control(repeats=3)" in src
