@@ -74,9 +74,12 @@ class StageRunner:
         An executed stage's reader takes the schema of the DataFrame
         it just wrote, so reading it back launches no schema-inference
         job; hive partition columns still come last, as inferred. A
-        skipped stage was written by an earlier run, so its reader
-        infers the schema from the committed files
-        (``spark.read.parquet``)."""
+        skipped stage was written by an earlier run: its reader takes
+        the schema from one committed part file's footer, read on the
+        driver (``lineage.footer_schema``), again without a job. A
+        hive-partitioned skipped stage, or one whose footer cannot be
+        read that way, infers it (``spark.read.parquet``), which is a
+        1-task Spark job."""
         path = self.stage_path(name)
         t0 = L.now_s()
         if L.stage_committed(self.spark, self.out_dir, name):
@@ -85,7 +88,13 @@ class StageRunner:
                 self.spark, self.out_dir, self.run_id, name,
                 L.STATUS_SKIPPED, t0,
             )
-            return self.spark.read.parquet(path)
+            schema = (
+                None if partition_by else L.footer_schema(self.spark, path)
+            )
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(schema)
+            return reader.parquet(path)
         try:
             out = build()
             w = out.write.mode("overwrite")

@@ -48,6 +48,7 @@ aggregate. The aggregating reads (`read_lineage`, `run_stats`,
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -57,6 +58,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kgp import fsutil
 
@@ -157,6 +159,41 @@ def per_partition_counts(
             # footer) — fall through to the authoritative data scan
             pass
     return _scan_counts(spark, stage_path)
+
+
+# the key under which Spark's parquet writer records the DataFrame
+# schema (as StructType JSON) in every part file's footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(
+    spark: SparkSession, stage_path: str
+) -> StructType | None:
+    """The Spark schema a stage's output was written with, from ONE
+    part file's footer, read on the driver with pyarrow — or None when
+    it cannot be read that way: a non-local FileSystem, no part file,
+    a footer without Spark's schema key, an unreadable footer.
+
+    Spark's own schema inference (``spark.read.parquet``) reads the
+    same key from one part file, but as a 1-task Spark job. Like
+    inference, ``spark.read.schema(<this>)`` makes every field
+    nullable, so both readers have the same schema."""
+    local = fsutil.local_path(spark, stage_path)
+    if local is None:
+        return None
+    try:
+        files = _part_files(spark, stage_path)
+        if not files:
+            return None
+        kv = pq.read_metadata(os.path.join(local, files[0])).metadata
+        raw = (kv or {}).get(_SPARK_SCHEMA_KEY)
+        if raw is None:
+            return None
+        return StructType.fromJson(json.loads(raw))
+    except (OSError, ValueError, KeyError, TypeError):
+        # ValueError covers pyarrow.lib.ArrowInvalid and bad JSON;
+        # KeyError/TypeError a JSON value that is no StructType
+        return None
 
 
 def append_lineage(

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
 
+from kgp.operators import bind_once
+
 DEFAULT_DIM = 64  # driver-fixture dim; reference uses 1536 (conf-able)
 
 
@@ -122,7 +124,11 @@ def ensure_embeddings_parquet_local(
 
 def l2_normalize(vec: Column) -> Column:
     """JVM-side L2 normalization of ARRAY<FLOAT> (pre-compute for
-    cosine-as-dot at query time — the standard ANN layout trick)."""
+    cosine-as-dot at query time — the standard ANN layout trick).
+
+    The norm is bound once per vector (``bind_once``): closed over by
+    the per-element lambda, its O(d) fold would run once per element,
+    O(d²) per vector."""
     norm = F.sqrt(
         F.aggregate(
             vec,
@@ -130,4 +136,9 @@ def l2_normalize(vec: Column) -> Column:
             lambda a, x: a + x.cast("double") * x.cast("double"),
         )
     )
-    return F.transform(vec, lambda x: (x.cast("double") / norm).cast("float"))
+    return bind_once(
+        norm,
+        lambda nm: F.transform(
+            vec, lambda x: (x.cast("double") / nm).cast("float")
+        ),
+    )

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgp.operators import bind_once, explode_rows
+
 MINHASH_K = 12
 LSH_BANDS = 6
 LSH_ROWS = MINHASH_K // LSH_BANDS
@@ -72,13 +74,16 @@ def char_shingles_col(s: Column, n: int = 3) -> Column:
     standard blocking key for entity NAMES, where token shingles are
     useless (names are 1-3 tokens). Strings shorter than n yield
     themselves. Pure JVM HOFs."""
-    low = F.lower(s)
-    n_sh = F.greatest(F.length(low) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.substring(low, i, n),
-        )
+    return bind_once(
+        F.lower(s),
+        lambda low: F.array_distinct(
+            F.transform(
+                F.sequence(
+                    F.lit(1), F.greatest(F.length(low) - (n - 1), F.lit(1))
+                ),
+                lambda i: F.substring(low, i, n),
+            )
+        ),
     )
 
 
@@ -108,15 +113,16 @@ def shingles_col(text: Column, n: int = SHINGLE_N) -> Column:
     w[i..i+n-1] joined by ' ' for i in 0..len-n; documents shorter than
     n tokens yield the whole text as one shingle (so they still hash).
     """
-    w = F.split(text, " ", -1)
-    n_sh = F.greatest(F.size(w) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n_sh),
-            lambda i: F.concat_ws(
-                " ", F.slice(w, i, n)
-            ),
-        )
+    return bind_once(
+        F.split(text, " ", -1),
+        lambda w: F.array_distinct(
+            F.transform(
+                F.sequence(
+                    F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1))
+                ),
+                lambda i: F.concat_ws(" ", F.slice(w, i, n)),
+            )
+        ),
     )
 
 
@@ -149,10 +155,12 @@ def minhash_signature(
 
     explode is narrow; the groupBy(id) min-agg partially aggregates
     map-side, so the shuffle carries K longs per id, not the exploded
-    set.
+    set. ``explode_rows`` keeps the optimizer from building a computed
+    ``set_col`` (``shingles_col``) a second time for an inferred
+    non-empty filter.
     """
+    el = explode_rows(df, [id_col], set_col, "_e")
     if family == "fast":
-        el = df.select(id_col, F.explode(set_col).alias("_e"))
         aggs = [
             F.min(F.xxhash64(F.lit(i), F.col("_e"))).alias(f"h{i}")
             for i in range(k)
@@ -162,7 +170,7 @@ def minhash_signature(
     # digest materialized in its own projection so the K min-aggs
     # slice a bound column instead of re-evaluating the hashes K times;
     # min(BIGINT via conv base16→10) == min(fixed-width hex chunk).
-    el = df.select(id_col, F.explode(set_col).alias("_e")).select(
+    el = el.select(
         id_col,
         F.concat(F.sha2(F.col("_e"), 256), F.md5(F.col("_e"))).alias("_d"),
     )

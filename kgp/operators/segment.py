@@ -40,6 +40,7 @@ from kgp.constants import (
     SEGMENT_WINDOW_SECONDS,
     TOKENS_PER_ENTRY,
 )
+from kgp.operators import bind_once, explode_rows
 from kgp.oracle import Entry, segment_entries
 
 # tokens per 30 s window — integral by construction (60)
@@ -52,35 +53,40 @@ assert _TOKENS_PER_WINDOW % TOKENS_PER_ENTRY == 0
 def _segs_array(text: Column) -> Column:
     """ARRAY<STRUCT<seg_idx,start_s,end_s,text>> for one page's text.
 
-    All JVM higher-order functions — no UDF, no shuffle.
+    All JVM higher-order functions — no UDF, no shuffle. The token
+    array is bound once per row (``bind_once``): the per-segment
+    lambda would otherwise re-split the whole text for every window.
     """
-    toks = F.split(text, " ", -1)
-    n = F.size(toks)
-    n_segs = F.ceil(n / F.lit(_TOKENS_PER_WINDOW)).cast("int")
-    return F.transform(
-        F.sequence(F.lit(0), n_segs - 1),
-        lambda k: F.struct(
-            k.cast("int").alias("seg_idx"),
-            (k * F.lit(SEGMENT_WINDOW_SECONDS)).alias("start_s"),
-            F.when(
-                k < n_segs - 1, (k + 1) * F.lit(SEGMENT_WINDOW_SECONDS)
-            )
-            .otherwise(n.cast("double") * F.lit(SECONDS_PER_TOKEN))
-            .alias("end_s"),
-            F.concat(
-                # leading-space quirk: segment 0 starts with "" + " " + entry
-                F.when(k == 0, F.lit(" ")).otherwise(F.lit("")),
-                F.concat_ws(
-                    " ",
-                    F.slice(
-                        toks,
-                        k * _TOKENS_PER_WINDOW + 1,
-                        F.lit(_TOKENS_PER_WINDOW),
+
+    def segs(toks: Column) -> Column:
+        n = F.size(toks)
+        n_segs = F.ceil(n / F.lit(_TOKENS_PER_WINDOW)).cast("int")
+        return F.transform(
+            F.sequence(F.lit(0), n_segs - 1),
+            lambda k: F.struct(
+                k.cast("int").alias("seg_idx"),
+                (k * F.lit(SEGMENT_WINDOW_SECONDS)).alias("start_s"),
+                F.when(
+                    k < n_segs - 1, (k + 1) * F.lit(SEGMENT_WINDOW_SECONDS)
+                )
+                .otherwise(n.cast("double") * F.lit(SECONDS_PER_TOKEN))
+                .alias("end_s"),
+                F.concat(
+                    # leading-space quirk: segment 0 starts with "" + " " + entry
+                    F.when(k == 0, F.lit(" ")).otherwise(F.lit("")),
+                    F.concat_ws(
+                        " ",
+                        F.slice(
+                            toks,
+                            k * _TOKENS_PER_WINDOW + 1,
+                            F.lit(_TOKENS_PER_WINDOW),
+                        ),
                     ),
-                ),
-            ).alias("text"),
-        ),
-    )
+                ).alias("text"),
+            ),
+        )
+
+    return bind_once(F.split(text, " ", -1), segs)
 
 
 def with_segments(pages: DataFrame) -> DataFrame:
@@ -96,8 +102,7 @@ def with_segments(pages: DataFrame) -> DataFrame:
 def segment_pages(pages: DataFrame) -> DataFrame:
     """`segments` table: url, seg_idx, start_s, end_s, text."""
     return (
-        with_segments(pages)
-        .select("url", F.explode("segs").alias("s"))
+        explode_rows(with_segments(pages), ["url"], "segs", "s")
         .select(
             "url",
             F.col("s.seg_idx").alias("seg_idx"),

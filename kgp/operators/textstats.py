@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kgp.operators import bind_once
+
 # stopword marker sets per language — pinned, shared with the SQL
 # oracle (kgp.queries_ext renders them into the VALUES clause). Over
 # the driver `documents` vocabulary these act as n-gram-frequency
@@ -182,17 +184,22 @@ def quality_score(
 def dup_ratio_e4_sql(text_col: str) -> str:
     """Gopher duplicate-2-gram fraction (×10⁴ integer) as ONE SQL
     expression — the pipeline-filter twin of `repetition_stats`
-    (parity-tested); docs with <2 tokens carry no gram and score 0."""
-    w = f"split({text_col}, ' ', -1)"
+    (parity-tested); docs with <2 tokens carry no gram and score 0.
+
+    The token array ``w`` and the gram array ``g`` are each bound once
+    per row as lambda variables (``kgp.operators.bind_once``); ``g``
+    is bound inside the ELSE branch, so a 1-token doc never builds the
+    descending ``sequence(1, 0)`` whose ``element_at(w, 0)`` raises."""
     g = (
-        f"transform(sequence(1, size({w}) - 1),"
-        f" i -> concat(element_at({w}, i), ' ',"
-        f" element_at({w}, i + 1)))"
+        "transform(sequence(1, size(w) - 1),"
+        " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
     )
     return (
-        f"CASE WHEN size({w}) < 2 THEN 0L ELSE"
-        f" CAST(size({g}) - size(array_distinct({g})) AS BIGINT)"
-        f" * 10000 div size({g}) END"
+        f"element_at(transform(array(split({text_col}, ' ', -1)),"
+        f" w -> CASE WHEN size(w) < 2 THEN 0L ELSE"
+        f" element_at(transform(array({g}),"
+        f" g -> CAST(size(g) - size(array_distinct(g)) AS BIGINT)"
+        f" * 10000 div size(g)), 1) END), 1)"
     )
 
 
@@ -261,25 +268,30 @@ def lang_best_col(text: Column) -> Column:
     — the single argmax definition `lang_id` (oracle-gated) and the
     training pipeline's filter stage both compile from, usable as a
     projected column (zero shuffle, no doc_id join)."""
-    toks = F.array_distinct(F.split(text, " ", -1))
-    scored = F.array(
-        *[
-            F.struct(
-                F.size(
-                    F.array_intersect(
-                        toks, F.array(*[F.lit(m) for m in markers])
-                    )
-                ).alias("hits"),
-                F.lit(lang).alias("lang"),
-            )
-            for lang, markers in sorted(LANG_MARKERS.items())
-        ]
-    )
-    # argmax with pinned tie-break: sort structs asc by (hits, lang),
-    # take the last ⇒ max hits, lexicographically-last lang on ties.
-    # The SQL oracle uses row_number() OVER (ORDER BY hits DESC, lang
-    # DESC) — identical semantics.
-    return F.element_at(F.reverse(F.array_sort(scored)), 1)
+    def best(toks: Column) -> Column:
+        scored = F.array(
+            *[
+                F.struct(
+                    F.size(
+                        F.array_intersect(
+                            toks, F.array(*[F.lit(m) for m in markers])
+                        )
+                    ).alias("hits"),
+                    F.lit(lang).alias("lang"),
+                )
+                for lang, markers in sorted(LANG_MARKERS.items())
+            ]
+        )
+        # argmax with pinned tie-break: sort structs asc by (hits,
+        # lang), take the last ⇒ max hits, lexicographically-last lang
+        # on ties. The SQL oracle uses row_number() OVER (ORDER BY hits
+        # DESC, lang DESC) — identical semantics.
+        return F.element_at(F.reverse(F.array_sort(scored)), 1)
+
+    # the token set is bound once per row: array_sort evaluates its
+    # input interpretively, so a closed-over token set would be
+    # rebuilt once per language
+    return bind_once(F.array_distinct(F.split(text, " ", -1)), best)
 
 
 def lang_id(

@@ -109,3 +109,32 @@ def test_l2_normalize_unit_norm(spark):
         ).alias("sq")
     ).collect()
     assert all(abs(r["sq"] - 1.0) < 1e-5 for r in norms)
+
+
+def test_l2_normalize_equals_closure_form_at_reference_dim(spark):
+    """At the reference's d = 1536 the bound norm gives exactly the
+    floats of the closure form (norm recomputed per element), also
+    for a NULL and an all-equal vector."""
+    vecs = spark.range(6).select(
+        "id",
+        F.when(F.col("id") == 2, F.lit(None)).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), F.lit(1536)),
+                lambda i: F.when(F.col("id") == 4, F.lit(0.25))
+                .otherwise(F.sin(i * (F.col("id") + 1)) * 3.7)
+                .cast("float"),
+            )
+        ).alias("v"),
+    )
+    got = vecs.select("id", l2_normalize(F.col("v")).alias("n"))
+    want = vecs.select(
+        "id",
+        F.expr(
+            "transform(v, x -> CAST(CAST(x AS DOUBLE) / sqrt(aggregate("
+            "v, 0D, (a, y) -> a + CAST(y AS DOUBLE) * CAST(y AS DOUBLE)))"
+            " AS FLOAT))"
+        ).alias("n"),
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )

@@ -5,6 +5,7 @@ refactor breaks pushdown or inflates shuffles, these fail before any
 benchmark does.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgp.operators.segment import extract_docs
@@ -214,3 +215,57 @@ def test_tfidf_scans_corpus_once(spark, tmp_path):
     assert plan.count("FileScan parquet") == 0, plan  # scan happened
     # inside the eager localCheckpoint; all consumers read its blocks
     assert "WindowGroupLimit" in plan, plan  # rank<=k pushed down
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _filters(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines() if "Filter " in ln]
+
+
+@pytest.mark.parametrize("family", ["fast", "oracle"])
+def test_minhash_signature_splits_each_text_once(spark, family):
+    """The shingle set is built once per row: its token array is bound
+    as a lambda variable, so the optimized plan holds ONE split (a
+    closed-over split is re-evaluated for every shingle), and no
+    inferred Filter rebuilds the set below the explode."""
+    from kgp.operators.linking import minhash_signature, shingles_col
+
+    docs = extract_docs(synth_pages(spark, 20))
+    sets_df = docs.select(
+        "url", shingles_col(F.col("extracted_text")).alias("_sh")
+    )
+    plan = _optimized(minhash_signature(sets_df, "url", "_sh", family=family))
+    assert plan.count("split(") == 1, plan
+    assert not [f for f in _filters(plan) if "transform(" in f], plan
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    ["lang_best_col", "dup_ratio_e4_sql", "segment_pages",
+     "char_shingles_col"],
+)
+def test_text_kernels_evaluate_per_row_input_once(spark, kernel):
+    """Each text kernel evaluates its per-row input (the token split,
+    the lowercased string) once: it appears once in the optimized
+    plan, never once per closure reference, per language or in an
+    inferred Filter."""
+    from kgp.operators.linking import char_shingles_col
+    from kgp.operators.segment import segment_pages
+    from kgp.operators.textstats import dup_ratio_e4_sql, lang_best_col
+
+    text = F.col("text")
+    needle, build = {
+        "lang_best_col": ("split(", lambda df: df.select(
+            lang_best_col(text).alias("b"))),
+        "dup_ratio_e4_sql": ("split(", lambda df: df.select(
+            F.expr(dup_ratio_e4_sql("text")).alias("d"))),
+        "segment_pages": ("split(", segment_pages),
+        "char_shingles_col": ("lower(", lambda df: df.select(
+            char_shingles_col(text).alias("c"))),
+    }[kernel]
+    plan = _optimized(build(synth_pages(spark, 5)))
+    assert plan.count(needle) == 1, plan
+    assert not [f for f in _filters(plan) if "transform(" in f], plan

@@ -183,3 +183,59 @@ def test_gazetteer_extractors_match_oracle(spark, texts, extra):
             (o, s, lab) for s, lab, o in want if lab in ENTITY_LABELS
         )[:MAX_ENTITIES_PER_DOC]
         assert triples(c) == [(s, lab, o) for o, s, lab in capped], text
+
+
+# the shingle set and both signature families as written before the
+# token array was bound once (a closure over split(t), explode over
+# the set) — the reference the bound kernels must equal value for value
+_CLOSURE_SHINGLES = (
+    "array_distinct(transform(sequence(1,"
+    " greatest(size(split(t, ' ', -1)) - 2, 1)),"
+    " i -> concat_ws(' ', slice(split(t, ' ', -1), i, 3))))"
+)
+_SHINGLE_EDGES = [
+    None, "", " ", "a", "a b", "a  b", "a b c", "  a b  ", "a b a b a b",
+    "x y z x y z", "a  b  c  d",
+]
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(st.lists(_text, min_size=1, max_size=30))
+def test_bound_shingles_and_signatures_equal_closure_form(spark, texts):
+    """shingles_col and minhash_signature (both families) equal the
+    closure-form shingle set and explode-based signatures on NULL,
+    empty, 1-2-token, double-space and duplicate-shingle texts."""
+    from kgp.operators.linking import MINHASH_K, minhash_signature, shingles_col
+
+    rows = [(f"d{i}", t) for i, t in enumerate(_SHINGLE_EDGES + texts)]
+    df = spark.createDataFrame(rows, "id string, t string")
+    sets = df.select("id", shingles_col(F.col("t")).alias("sh"))
+    ref = df.select("id", F.expr(_CLOSURE_SHINGLES).alias("sh"))
+    assert sorted(map(tuple, sets.collect())) == sorted(
+        map(tuple, ref.collect())
+    )
+
+    el = ref.select("id", F.explode("sh").alias("e"))
+    digest = F.concat(F.sha2("e", 256), F.md5("e"))
+    ref_sig = {
+        "fast": el.groupBy("id").agg(*[
+            F.min(F.xxhash64(F.lit(i), "e")).alias(f"h{i}")
+            for i in range(MINHASH_K)
+        ]),
+        "oracle": el.groupBy("id").agg(*[
+            F.min(
+                F.conv(F.substring(digest, i * 8 + 1, 8), 16, 10)
+                .cast("long")
+            ).alias(f"h{i}")
+            for i in range(MINHASH_K)
+        ]),
+    }
+    for family, want in ref_sig.items():
+        got = minhash_signature(sets, "id", "sh", family=family)
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), family

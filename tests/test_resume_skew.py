@@ -203,6 +203,72 @@ def test_executed_stage_reader_needs_no_schema_job(
     )
 
 
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_skipped_stage_reader_needs_no_schema_job(
+    spark, pages_path, tmp_path, partitioned
+):
+    """A skipped unpartitioned stage takes its reader's schema from one
+    part file's footer, read on the driver: skipping it launches no
+    Spark job. A hive-partitioned stage still infers its schema. Both
+    readers equal `spark.read.parquet`'s, schema and rows."""
+    from kgp.checkpoint import StageRunner
+    from kgp.operators.sampling import hash_split
+    from kgp.operators.segment import extract_docs
+
+    pages = spark.read.parquet(pages_path)
+    if partitioned:
+        name, partition_by = "split", ["split"]
+
+        def build():
+            return hash_split(extract_docs(pages))
+    else:
+        name, partition_by = "docs", None
+
+        def build():
+            return extract_docs(pages)
+
+    out = str(tmp_path / "o")
+    StageRunner(spark, out).stage(name, build, partition_by)
+    runner = StageRunner(spark, out)
+    reader, jobs = _jobs_in_group(
+        spark, f"skip-{name}", lambda: runner.stage(name, build, partition_by)
+    )
+    assert runner.skipped == [name]
+    if not partitioned:
+        assert jobs == []
+    inferred = spark.read.parquet(runner.stage_path(name))
+    assert reader.schema == inferred.schema
+    assert sorted(map(tuple, reader.collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
+
+
+def test_skipped_stage_without_spark_footer_schema_infers(
+    spark, tmp_path
+):
+    """A committed stage whose part files carry no Spark schema key
+    (written by another parquet writer) is read with inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kgp.checkpoint import StageRunner
+
+    out = str(tmp_path / "o")
+    os.makedirs(f"{out}/docs")
+    pq.write_table(
+        pa.table({"doc_id": ["a", "b"], "n": [1, 2]}),
+        f"{out}/docs/part-00000.parquet",
+    )
+    open(f"{out}/docs/_SUCCESS", "w").close()
+    L.append_lineage(spark, out, "r0", "docs", L.STATUS_COMMITTED,
+                     L.now_s(), counts=[(0, 2)])
+    assert L.footer_schema(spark, f"{out}/docs") is None
+    runner = StageRunner(spark, out)
+    reader = runner.stage("docs", lambda: None)
+    assert runner.skipped == ["docs"]
+    assert sorted(map(tuple, reader.collect())) == [("a", 1), ("b", 2)]
+
+
 def test_lineage_fixture_reads_back_as_lineage_schema(spark):
     """The pinned oracle ledger has the same column types as a real
     ledger (UTC `timestamp`, not `timestamp_ntz`)."""
