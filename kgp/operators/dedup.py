@@ -20,8 +20,9 @@ Scale notes: exact/fingerprint/simhash are one shuffle each (groupBy on
 a hash) with map-side partial agg. MinHash-LSH is explode→min-agg→band
 join, all key-partitioned; candidate verification touches only pairs
 that collide in ≥1 band. At 10¹² docs the band join is the hot spot —
-AQE skew-split plus a band-key salting fallback (kgp.skew) keep
-straggler tasks bounded.
+AQE's skew split keeps straggler tasks bounded, and the opt-in
+``max_bucket`` drops boilerplate buckets whose pair count is
+quadratic (kgp.skew.split_hot_keys).
 """
 
 from __future__ import annotations
@@ -409,9 +410,7 @@ def _span_rows(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """Explode docs into non-overlapping ``k``-token blocks with the
-    packed keeper key ``_sk`` (see span_dedup_stats)."""
-    from pyspark.sql import types as T
-
+    keeper key ``_sk = struct(id, pos)`` (see span_dedup_stats)."""
     wt = docs.select(
         id_col, F.split(F.col(text_col), " ", -1).alias("w")
     )
@@ -424,53 +423,9 @@ def _span_rows(
             )
         ).alias("pos", "span"),
     )
-    # keeper key: min over a STRUCT buffers a non-mutable type and
-    # demotes the span groupBy to SortAggregate (the round-1 minhash
-    # scale-killer all over again) — for integral non-negative ids,
-    # pack (id, pos) into ONE BIGINT so the agg stays HashAggregate.
-    # 2^20 block positions/doc = 2^20·k tokens/doc headroom; ids must
-    # fit 43 bits. Non-integral ids keep the struct (SortAggregate,
-    # documented cost).
-    pos_bits = 20
-    if isinstance(
-        docs.schema[id_col].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    ):
-        # the packing is only a total order when id ∈ [0, 2^43) and
-        # pos < 2^20 — outside that it silently picks a WRONG keeper
-        # (64-bit snowflake/xxhash ids are integral and would take
-        # this path), so the bound is enforced per-row: assert_true
-        # raises instead of corrupting, and costs one codegen'd
-        # comparison folded into the key expression
-        in_bounds = (
-            (F.col(id_col) >= 0)
-            & (F.col(id_col) < F.lit(1 << 43).cast("long"))
-            & (F.col("pos") < F.lit(1 << pos_bits))
-        )
-        guard = F.assert_true(
-            in_bounds,
-            F.lit(
-                "span_dedup_stats: id/pos exceed packed-keeper bounds "
-                "(id must be in [0, 2^43), doc must have < 2^20 "
-                "blocks) — use a string id column or a larger k"
-            ),
-        )
-        # the when() branches per row, so the multiplication (which
-        # would itself ANSI-overflow for huge ids, with a less useful
-        # message) is only evaluated for in-bounds rows
-        spans = spans.withColumn(
-            "_sk",
-            F.when(
-                in_bounds,
-                F.col(id_col).cast("long") * (1 << pos_bits)
-                + F.col("pos"),
-            ).otherwise(F.coalesce(guard.cast("long"), F.lit(0))),
-        )
-    else:
-        spans = spans.withColumn(
-            "_sk", F.struct(F.col(id_col), F.col("pos"))
-        )
-    return spans
+    return spans.withColumn(
+        "_sk", F.struct(F.col(id_col), F.col("pos"))
+    )
 
 
 def _span_annotated(
@@ -493,49 +448,57 @@ def _span_annotated(
     map-side partial aggregation and no AQE skew split, so ONE
     boilerplate-hot span (an empty block, a legal banner) puts all
     its rows in one unsplittable task. ``hot_span_cap`` is the
-    opt-in guard, mirroring lsh_candidate_pairs' max_bucket: a
-    map-side-partial (hence skew-immune) groupBy pre-counts spans,
-    spans hotter than the cap resolve their (cnt, keeper) from that
-    broadcast-small hot table, and only the bounded-cardinality
-    (≤ cap rows per span) remainder flows through the window. The
-    guard costs one extra corpus-sized shuffle (the pre-count) plus a
-    second pass over the span lineage — ~2× the unguarded cost — so
-    it stays opt-in, for corpora where exact/boilerplate dedup has
-    NOT already removed the hot blocks. Semantics are identical
-    either way (parity-tested).
+    opt-in guard. Like lsh_candidate_pairs' max_bucket it runs on
+    kgp.skew.split_hot_keys: a map-side-partial (hence skew-immune)
+    groupBy pre-counts spans, spans hotter than the cap resolve their
+    (cnt, keeper) from that broadcast-small hot table, and only the
+    bounded-cardinality (≤ cap rows per span) cold rows flow through
+    the window. The guard costs one extra corpus-sized shuffle (the
+    pre-count) plus a second pass over the span lineage — ~2× the
+    unguarded cost — so it stays opt-in, for corpora where
+    exact/boilerplate dedup has NOT already removed the hot blocks.
+    Semantics are identical either way (parity-tested).
     """
     from pyspark.sql.window import Window
 
+    from kgp.skew import split_hot_keys
+
     w_span = Window.partitionBy("span")
-    if hot_span_cap is None:
-        return spans.withColumn(
+
+    def windowed(rows: DataFrame) -> DataFrame:
+        return rows.withColumn(
             "cnt", F.count(F.lit(1)).over(w_span)
         ).withColumn("_keeper", F.min("_sk").over(w_span))
-    from kgp.materialize import materialize as _mat
 
-    # materialize: the hot table is consumed twice (resolve join +
-    # anti join) and its lineage is the full corpus pre-count
-    hot = F.broadcast(
-        _mat(
-            spans.groupBy("span")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.min("_sk").alias("_keeper"),
-            )
-            .filter(F.col("cnt") > hot_span_cap)
-        )
+    if hot_span_cap is None:
+        return windowed(spans)
+    hot, cold = split_hot_keys(
+        spans, ["span"], hot_span_cap, F.min("_sk").alias("_keeper")
     )
-    hot_rows = spans.join(hot, "span")
-    cold_rows = (
-        spans.join(hot.select("span"), "span", "left_anti")
-        .withColumn("cnt", F.count(F.lit(1)).over(w_span))
-        .withColumn("_keeper", F.min("_sk").over(w_span))
+    hot_rows = spans.join(
+        F.broadcast(hot.withColumnRenamed("_n", "cnt")), "span"
     )
-    return hot_rows.unionByName(cold_rows.select(*hot_rows.columns))
+    return hot_rows.unionByName(windowed(cold))
 
 
 def _span_kept() -> Column:
     return (F.col("cnt") == 1) | (F.col("_sk") == F.col("_keeper"))
+
+
+def _kept_text(kept: Column) -> Column:
+    """Per-doc aggregate: the kept blocks re-joined with single spaces
+    in position order."""
+    return F.concat_ws(
+        " ",
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.when(kept, F.struct(F.col("pos"), F.col("span")))
+                )
+            ),
+            lambda s: s.getField("span"),
+        ),
+    )
 
 
 def span_dedup_stats(
@@ -564,9 +527,8 @@ def span_dedup_stats(
     the hot-span exposure and the opt-in ``hot_span_cap`` guard); the
     per-doc reassembly is one more shuffle carrying only kept blocks.
     At 100 TB the reassembly groupBy is the honest cost of C4-style
-    cleaning — span_dedup_flags is the flag-only variant that drops
-    it; this operator returns the digest so tests pin the rewrite
-    semantics end-to-end.
+    cleaning; this operator returns the digest so tests pin the
+    rewrite semantics end-to-end.
     """
     j = _span_annotated(
         _span_rows(docs, id_col, text_col, k), hot_span_cap
@@ -580,48 +542,7 @@ def span_dedup_stats(
         F.sum(F.when(kept, 0).otherwise(1))
         .cast("long")
         .alias("n_removed"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                kept, F.struct(F.col("pos"), F.col("span"))
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("span"),
-                ),
-            )
-        ).alias("clean_md5"),
-    )
-
-
-def span_dedup_flags(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = SPAN_TOKENS,
-    hot_span_cap: int | None = None,
-) -> DataFrame:
-    """Flag-only C4 span dedup: one row per ``k``-token block,
-    ``(id, pos, is_dup, kept)`` — the 100 TB writer-side variant of
-    span_dedup_stats. Skips the per-doc reassembly groupBy (the third
-    shuffle, which carries every kept block): the sink writer rewrites
-    each document as it streams blocks, dropping ``kept = false``
-    ones, so the flags table is the whole distributed cost.
-    Consistency with span_dedup_stats (n_spans = rows per id,
-    n_removed = rows with kept = false) is pinned in tests.
-    """
-    j = _span_annotated(
-        _span_rows(docs, id_col, text_col, k), hot_span_cap
-    )
-    return j.select(
-        id_col,
-        "pos",
-        (F.col("cnt") > 1).alias("is_dup"),
-        _span_kept().alias("kept"),
+        F.md5(_kept_text(kept)).alias("clean_md5"),
     )
 
 
@@ -638,8 +559,7 @@ def span_cleaned_docs(
     (the same (cnt, keeper) law as span_dedup_stats; parity with its
     ``clean_md5`` digest is pinned in tests). This is the operator the
     training-data prep pipeline materializes as its ``span_cleaned``
-    stage; span_dedup_stats is the audit view, span_dedup_flags the
-    writer-side variant.
+    stage; span_dedup_stats is the audit view.
 
     Untouched docs (no removed block) keep their ORIGINAL text
     byte-identically — only docs that lose at least one block are
@@ -655,7 +575,7 @@ def span_cleaned_docs(
     blocks, and one join back on ``id_col`` — the corpus side arrives
     already hash-partitioned on ``id_col`` from no prior shuffle, so
     this is the honest one-extra-shuffle cost of rewriting text
-    in-engine (the flags variant trades it for sink-writer logic).
+    in-engine.
     """
     j = _span_annotated(
         _span_rows(docs, id_col, text_col, k), hot_span_cap
@@ -665,20 +585,7 @@ def span_cleaned_docs(
         j.groupBy(id_col)
         .agg(
             F.sum(F.when(kept, 0).otherwise(1)).alias("_n_removed"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                kept,
-                                F.struct(F.col("pos"), F.col("span")),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("span"),
-                ),
-            ).alias("_span_clean"),
+            _kept_text(kept).alias("_span_clean"),
         )
         .filter(F.col("_n_removed") > 0)
         .select(id_col, "_span_clean")

@@ -19,8 +19,9 @@ Design notes (100 TB scale):
   independent SQL oracle. One explode + one groupBy(id) shuffle;
   map-side partial min keeps shuffle volume at K small strings per doc.
 * Banding: K=12 hashes → 6 bands × 2 rows (P[candidate] = 1-(1-s²)⁶;
-  s=0.7 → 0.98). Candidate join shuffles on band key; hot bands (common
-  boilerplate) are AQE-skew-split and capped via distinct-before-join.
+  s=0.7 → 0.98). Candidate join shuffles on band key; AQE splits hot
+  bands' tasks, and the opt-in ``max_bucket`` drops buckets of common
+  boilerplate before the join (kgp.skew.split_hot_keys).
 * Scoring (X4) is exact set Jaccard over distinct shingles via
   array_intersect/array_union — whole-stage codegen, no Python.
 """
@@ -244,14 +245,15 @@ def lsh_candidate_pairs(
     pairs, so one boilerplate string in 20 % of a 100 TB corpus makes
     a single bucket quadratic — AQE's skew split rebalances the TASKS
     but cannot shrink the OUTPUT. When set, buckets with more than
-    ``max_bucket`` members are dropped before the self-join (one
-    size-count aggregation on the same key — co-partitioned with the
-    join, no extra exchange on the bands side). Standard LSH-dedup
-    practice: an over-cap bucket is near-certain boilerplate whose
-    members exact-dedup (or a dedicated boilerplate pass) handles at
-    O(B); pairs those docs form with DISTINCT documents through their
-    other, unskewed bands are unaffected. Skew evidence:
-    tests/test_resume_skew.py + PLANS.md.
+    ``max_bucket`` members are dropped before the self-join: the
+    cold side of kgp.skew.split_hot_keys (one map-side-partial count
+    per bucket, then a broadcast left-anti join against the few
+    over-cap buckets, so the bands side is not shuffled for it).
+    Standard LSH-dedup practice: an over-cap bucket is near-certain
+    boilerplate whose members exact-dedup (or a dedicated boilerplate
+    pass) handles at O(B); pairs those docs form with DISTINCT
+    documents through their other, unskewed bands are unaffected.
+    Skew evidence: tests/test_resume_skew.py + PLANS.md.
 
     materialize=True (default) eagerly materializes the bands table
     first (kgp.materialize — localCheckpoint locally, conf-switchable
@@ -268,13 +270,11 @@ def lsh_candidate_pairs(
 
         bands_df = _mat(bands_df)
     if max_bucket is not None:
-        small = (
-            bands_df.groupBy("band_idx", "band_key")
-            .agg(F.count(F.lit(1)).alias("_bucket_n"))
-            .filter(F.col("_bucket_n") <= max_bucket)
-            .select("band_idx", "band_key")
+        from kgp.skew import split_hot_keys
+
+        _, bands_df = split_hot_keys(
+            bands_df, ["band_idx", "band_key"], max_bucket
         )
-        bands_df = bands_df.join(small, ["band_idx", "band_key"])
     a = bands_df.select(
         F.col(id_col).alias("id_a"), "band_idx", "band_key"
     )

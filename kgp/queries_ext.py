@@ -2040,9 +2040,9 @@ def q_docs_span_dedup(spark, sf_dir):
     non-overlapping 10-token blocks occurring more than once in the
     corpus are removed keeping the globally-first occurrence; per-doc
     counts + the md5 of the cleaned text pin the rewrite end-to-end.
-    The Spark side resolves keepers via groupBy(min(struct)) + join
-    (map-side partial agg); the oracle uses window functions — two
-    algorithms, one answer."""
+    The Spark side resolves (cnt, keeper) with one Window over the
+    span key (count + min(struct(doc_id, pos))); the oracle ranks
+    with row_number — two algorithms, one answer."""
     from kgp.operators.dedup import span_dedup_stats
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

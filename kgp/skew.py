@@ -1,12 +1,21 @@
-"""X6 — explicit skew handling: salting, two-phase aggregation,
-url-hash repartitioning.
+"""X6 — explicit skew handling: the hot-key split, salting, url-hash
+repartitioning.
 
 North-rule: "skew from head entities and mega-domains is handled
 explicitly with salted aggregation keys, AQE skew-join hints, and
 url-hash repartitioning". AQE conf lives in kgp.session.ENGINE_CONF
-(adaptive.enabled + skewJoin.enabled); this module holds the two
+(adaptive.enabled + skewJoin.enabled); this module holds the
 API-level techniques AQE cannot do for you:
 
+* hot-key split — a window or self-join partitioned on a key puts all
+  of one key's rows into one task, and a self-join inside one key
+  emits a quadratic pair count that AQE's task split cannot shrink
+  (DS2, ICDE 2021). split_hot_keys counts rows per key once (a
+  groupBy: map-side partial aggregation, so no hot key lands in one
+  task) and separates the few over-cap keys from the rows whose key
+  is bounded. Both skew guards use it: lsh_candidate_pairs'
+  ``max_bucket`` keeps only the cold rows, _span_annotated's
+  ``hot_span_cap`` resolves hot spans from the broadcast count table.
 * two-phase salted aggregation — a groupBy on a zipf-headed key (head
   entity, mega-domain) funnels the head key's rows into one reduce
   task. Phase 1 aggregates on (key, salt = pmod(xxhash64(carrier), S))
@@ -25,6 +34,35 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kgp.materialize import materialize
+
+
+def split_hot_keys(
+    df: DataFrame, keys: list[str], cap: int, *aggs: Column
+) -> tuple[DataFrame, DataFrame]:
+    """Split ``df`` on the row count of its ``keys``: ``(hot, cold)``.
+
+    ``hot`` is the materialized table of keys with more than ``cap``
+    rows, ``(keys…, _n, aggs…)`` with ``_n`` the exact row count and
+    ``aggs`` evaluated over the key's rows in the same groupBy. It
+    holds at most |rows| / (cap + 1) keys, so callers broadcast it.
+    ``cold`` is the rows of ``df`` whose key has at most ``cap`` rows,
+    found by a broadcast left-anti join: no shuffle of ``df``.
+
+    The count is one groupBy with map-side partial aggregation, so a
+    hot key never lands in one task; its cost is one shuffle of at
+    most |keys| partial rows per map task plus a second pass over
+    ``df``'s lineage. Rows with a NULL key never match the anti join
+    and stay in ``cold``.
+    """
+    hot = materialize(
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"), *aggs)
+        .filter(F.col("_n") > cap)
+    )
+    cold = df.join(F.broadcast(hot.select(*keys)), keys, "left_anti")
+    return hot, cold
 
 
 def salt_col(carrier: Column, n_salts: int) -> Column:
@@ -56,27 +94,6 @@ def salted_count_distinct(
         )
         .groupBy(key, "_salt")
         .agg(F.countDistinct("_v").alias("_partial"))
-    )
-    return phase1.groupBy(key).agg(F.sum("_partial").alias(out_col))
-
-
-def salted_sum(
-    df: DataFrame,
-    key: str,
-    value_col: str,
-    carrier: str,
-    n_salts: int = 16,
-    out_col: str = "total",
-) -> DataFrame:
-    """Two-phase SUM(value) GROUP BY key over a salted carrier."""
-    phase1 = (
-        df.select(
-            key,
-            F.col(value_col).alias("_v"),
-            salt_col(F.col(carrier), n_salts).alias("_salt"),
-        )
-        .groupBy(key, "_salt")
-        .agg(F.sum("_v").alias("_partial"))
     )
     return phase1.groupBy(key).agg(F.sum("_partial").alias(out_col))
 

@@ -542,9 +542,8 @@ def test_span_dedup_randomized_vs_python(spark):
 
 
 def test_span_dedup_string_ids_struct_fallback(spark):
-    """Non-integral ids take the struct-keeper path (documented
-    SortAggregate cost) — semantics must match the packed-BIGINT path
-    exactly, keeper = lexicographic (id, pos) min."""
+    """String ids: keeper = lexicographic (id, pos) min, the same law
+    as the Python reference."""
     import hashlib
 
     from kgp.operators.dedup import span_dedup_stats
@@ -569,18 +568,37 @@ def test_span_dedup_string_ids_struct_fallback(spark):
     assert got == want
 
 
-def test_span_dedup_rejects_out_of_bounds_integral_ids(spark):
-    """Integral ids outside [0, 2^43) would silently corrupt the
-    packed keeper — the per-row guard must raise instead."""
-    import pytest
+def test_span_dedup_accepts_any_integral_ids(spark):
+    """The keeper key is struct(id, pos) for every id type, so integral
+    ids carry no range limit: huge, negative and zero ids resolve the
+    first occurrence like the Python reference, with and without the
+    hot-span guard."""
+    import hashlib
 
     from kgp.operators.dedup import span_dedup_stats
 
-    df = spark.createDataFrame(
-        [(1 << 50, "a b c"), (1, "a b c")], "doc_id long, text string"
-    )
-    with pytest.raises(Exception, match="packed-keeper bounds"):
-        span_dedup_stats(df, k=3).collect()
+    docs = [
+        (1 << 50, "a b c x y z"),
+        (-1, "x y z q r s"),
+        (0, "a b c"),
+        (1, "q r s a b c m n o"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    want = {
+        d: (n, du, rm, hashlib.md5(t.encode()).hexdigest())
+        for d, (n, du, rm, t) in _py_span_dedup(docs, 3).items()
+    }
+    # -1 keeps "x y z" and "q r s"; 0 keeps "a b c"; 2^50 loses both
+    assert want[1 << 50][2] == 2 and want[-1][2] == 0
+    for cap in (None, 1):
+        got = {
+            r["doc_id"]: (
+                r["n_spans"], r["n_dup_spans"], r["n_removed"],
+                r["clean_md5"],
+            )
+            for r in span_dedup_stats(df, k=3, hot_span_cap=cap).collect()
+        }
+        assert got == want, cap
 
 
 def test_rolling_fingerprint_matches_python_and_is_order_sensitive(spark):

@@ -147,13 +147,11 @@ def test_training_filter_stage_is_shuffle_free(spark):
 
 
 def test_span_dedup_groupby_stays_hash_aggregate(spark, tmp_path):
-    """The keeper min is packed into ONE BIGINT for integral ids so
-    the corpus-wide span aggregation keeps fixed-width buffers — a
-    struct/string min would demote the remaining per-doc aggregates
-    to SortAggregate. Since the round-4 window rewrite the span-key
-    count/min run as ONE Window over the span key (its sort is the
-    shuffle's, not an extra aggregate sort); the per-doc reassembly
-    stays ObjectHashAggregate (collect_list), also hash-based."""
+    """No span aggregation sorts: since the round-4 window rewrite the
+    span-key count/min run as ONE Window over the span key (its sort
+    is the shuffle's, not an aggregate sort), and the per-doc
+    reassembly stays ObjectHashAggregate (collect_list), also
+    hash-based."""
     import pandas as pd
 
     from kgp.operators.dedup import span_dedup_stats

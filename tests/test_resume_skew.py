@@ -11,7 +11,7 @@ from kgp.checkpoint import build_kg_pipeline
 from kgp.skew import (
     repartition_by_url_hash,
     salted_count_distinct,
-    salted_sum,
+    split_hot_keys,
 )
 from kgp.synth import synth_pages
 
@@ -420,17 +420,30 @@ def test_salted_count_distinct_equals_plain(spark, pages_path):
     assert plain == salted and plain
 
 
-def test_salted_sum_equals_plain(spark):
-    df = spark.createDataFrame(
-        [("k1", i % 7, f"c{i}") for i in range(1000)]
-        + [("k2", 1, "x")],
-        "key string, v int, carrier string",
-    )
-    plain = {r["key"]: r["t"] for r in
-             df.groupBy("key").agg(F.sum("v").alias("t")).collect()}
-    salted = {r["key"]: r["total"] for r in
-              salted_sum(df, "key", "v", "carrier").collect()}
-    assert plain == salted
+def test_split_hot_keys_partitions_rows(spark):
+    """One key with 120 rows over a cap of 10, the rest at or under
+    it: cold holds exactly the bounded keys' rows, hot counts the
+    over-cap key exactly, and cold is a broadcast left-anti join that
+    does not shuffle the input."""
+    cap = 10
+    rows = [("hot", i) for i in range(120)]
+    rows += [(f"k{j}", i) for j in range(30) for i in range(j % cap + 1)]
+    df = spark.createDataFrame(rows, "key string, v int")
+
+    hot, cold = split_hot_keys(df, ["key"], cap, F.max("v").alias("mx"))
+    assert [tuple(r) for r in hot.collect()] == [("hot", 120, 119)]
+    n_cold = cold.count()
+    n_hot = hot.agg(F.sum("_n")).first()[0]
+    assert n_cold + n_hot == df.count()
+    assert cold.groupBy("key").count().agg(F.max("count")).first()[0] <= cap
+    assert cold.filter(F.col("key") == "hot").count() == 0
+
+    plan = cold._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert not [
+        ln for ln in plan.splitlines()
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ], plan
 
 
 def test_url_hash_repartition_balances_mega_domains(spark, pages_path):
@@ -560,8 +573,33 @@ def test_minhash_pair_volume_on_template_pages(spark):
         assert all(2 * r["hot"] >= len(template) for r in hot)
 
         cap = min(r["hot"] for r in hot) - 1
-        capped = lsh_candidate_pairs(bands, "doc_id", max_bucket=cap).count()
-        assert capped < distinct
+        capped = {
+            (r["id_a"], r["id_b"])
+            for r in lsh_candidate_pairs(
+                bands, "doc_id", max_bucket=cap
+            ).collect()
+        }
+        assert len(capped) < distinct
+        # reference: the bucket filter as a count, an inner join back
+        # and the self-join, with no hot/cold split
+        small = (
+            bands.groupBy("band_idx", "band_key")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") <= cap)
+            .select("band_idx", "band_key")
+        )
+        kept = bands.join(small, ["band_idx", "band_key"])
+        ka = kept.select(F.col("doc_id").alias("id_a"), "band_idx", "band_key")
+        kb = kept.select(F.col("doc_id").alias("id_b"), "band_idx", "band_key")
+        want = {
+            (r["id_a"], r["id_b"])
+            for r in ka.join(kb, ["band_idx", "band_key"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+            .distinct()
+            .collect()
+        }
+        assert capped == want
     finally:
         bands.unpersist()
 

@@ -1,4 +1,4 @@
-"""Round-5 fixes: span hot-span guard parity, flag-only span dedup,
+"""Round-5 fixes: span hot-span guard parity, the span keeper law,
 Spark-Connect-safe file-size probe, \\x0B whitespace-class parity,
 triangle materialize-flag threading, substrate control smoke."""
 
@@ -12,7 +12,6 @@ from kgp.operators.dedup import (
     _file_sizes,
     near_dup_pairs_minhash,
     span_cleaned_docs,
-    span_dedup_flags,
     span_dedup_stats,
 )
 
@@ -56,47 +55,31 @@ def test_span_hot_cap_parity_string_ids(spark):
     assert got == base
 
 
-def test_span_flags_consistent_with_stats(spark):
-    """Flag-only variant: aggregating (id, pos, is_dup, kept) rows
-    reproduces span_dedup_stats' counting columns exactly."""
-    df = spark.createDataFrame(_hot_corpus(), "doc_id long, text string")
-    for cap in (None, 2):
-        stats = {
-            r["doc_id"]: (r["n_spans"], r["n_dup_spans"], r["n_removed"])
-            for r in span_dedup_stats(df, k=3, hot_span_cap=cap).collect()
-        }
-        rolled = {
-            r["doc_id"]: (r["n"], r["dups"], r["removed"])
-            for r in (
-                span_dedup_flags(df, k=3, hot_span_cap=cap)
-                .groupBy("doc_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("is_dup").cast("long")).alias("dups"),
-                    F.sum((~F.col("kept")).cast("long")).alias("removed"),
-                )
-                .collect()
-            )
-        }
-        assert rolled == stats, f"cap={cap}"
-
-
-def test_span_flags_keeper_is_first_occurrence(spark):
+def test_span_keeper_is_first_occurrence(spark):
+    """The keeper of a duplicated block is its lowest (id, pos)
+    occurrence, in the audit view and in the text rewrite alike."""
     df = spark.createDataFrame(
         [(1, "x y z a b c"), (2, "x y z q"), (3, "a b c")],
         "doc_id long, text string",
     )
-    flags = {
-        (r["doc_id"], r["pos"]): (r["is_dup"], r["kept"])
-        for r in span_dedup_flags(df, k=3).collect()
+    stats = {
+        r["doc_id"]: (r["n_spans"], r["n_dup_spans"], r["n_removed"],
+                      r["clean_md5"])
+        for r in span_dedup_stats(df, k=3).collect()
     }
-    assert flags == {
-        (1, 0): (True, True),   # "x y z" keeper (lowest (id, pos))
-        (1, 1): (True, True),   # "a b c" keeper
-        (2, 0): (True, False),  # loses "x y z" to doc 1
-        (2, 1): (False, True),  # "q" unique
-        (3, 0): (True, False),  # loses "a b c" to doc 1 pos 1
+
+    def md5(t):
+        return hashlib.md5(t.encode()).hexdigest()
+
+    assert stats == {
+        1: (2, 2, 0, md5("x y z a b c")),  # keeps both: lowest (id, pos)
+        2: (2, 1, 1, md5("q")),  # loses "x y z" to doc 1, "q" unique
+        3: (1, 1, 1, md5("")),  # loses "a b c" to doc 1 pos 1
     }
+    cleaned = {
+        r["doc_id"]: r["text"] for r in span_cleaned_docs(df, k=3).collect()
+    }
+    assert cleaned == {1: "x y z a b c", 2: "q", 3: ""}
 
 
 def test_span_cleaned_docs_digest_and_byte_identity(spark):
